@@ -2744,62 +2744,94 @@ ORACLE_SQL["streaming_value_quantiles"] = f"""
 # --- BEGIN GENERATED GATE ORDER (scripts/gen_gate_head.py) ---
 # Window = 0 never-driver-checked additions + 20 changed
 # entries + the 30 stalest driver greens (last green in
-# round(s) [0, 6], from CORRECTNESS_r*.json). Regenerate with
+# round(s) [6, 7]). Greens come from
+# CORRECTNESS rounds [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13];
+# --check rereads only those. Regenerate with
 #   python scripts/gen_gate_head.py
 # (pytest runs --check; hand-edits here go stale and FAIL).
 _GATE_HEAD = [
-    "text_repetition",  # last driver green: r6
-    "streaming_payment_match",  # last driver green: r12
-    "streaming_payment_match_outer",  # last driver green: r12
-    "streaming_payment_match_full",  # last driver green: r12
-    "streaming_topk_users",  # last driver green: r11
-    "streaming_running_totals_final",  # last driver green: r7
-    "streaming_dedup_replay",  # last driver green: r7
-    "streaming_hll_users",  # last driver green: r11
-    "streaming_sliding_1h_15m",  # last driver green: r11
-    "streaming_session_windows",  # last driver green: r11
-    "streaming_late_data_policy",  # last driver green: r11
-    "streaming_value_quantiles",  # last driver green: r6
-    "streaming_cusum_gate",  # last driver green: r11
-    "streaming_user_anomalies",  # last driver green: r11
-    "streaming_drift_tvd",  # last driver green: r11
-    "streaming_enriched_nation_totals",  # last driver green: r7
-    "ann_recall_audit",  # last driver green: r12
-    "ann_recall_clustered",  # last driver green: r12
-    "ann_label_audit",  # last driver green: r12
-    "ann_label_audit_clustered",  # last driver green: r12
-    "events_user_gini",  # last driver green: r0
-    "graph_degree_octaves",  # last driver green: r0
-    "graph_supplier_similarity",  # last driver green: r0
-    "mm_phash_distance_histogram",  # last driver green: r0
-    "mm_storage_profile",  # last driver green: r0
-    "orders_ship_latency",  # last driver green: r0
-    "quality_calibration_matrix",  # last driver green: r0
-    "sketch_bloom_fpr",  # last driver green: r0
-    "streaming_asof_rates",  # last driver green: r0
-    "streaming_bloom_gate",  # last driver green: r0
-    "streaming_boilerplate_gate",  # last driver green: r0
-    "text_zipf_octaves",  # last driver green: r0
-    "warehouse_column_stats",  # last driver green: r0
-    "warehouse_partition_advisor",  # last driver green: r0
-    "customers_without_urgent_orders",  # last driver green: r6
-    "dedup_simhash_fingerprints",  # last driver green: r6
-    "dedup_simhash_pairs",  # last driver green: r6
-    "emb_near_dup",  # last driver green: r6
-    "emb_near_dup_lsh",  # last driver green: r6
-    "events_attribution",  # last driver green: r6
-    "events_sessionization",  # last driver green: r6
-    "events_type_mode",  # last driver green: r6
-    "events_type_value_quantiles",  # last driver green: r6
-    "events_value_histogram",  # last driver green: r6
-    "events_variant_props",  # last driver green: r6
-    "fuzzy_customer_names",  # last driver green: r6
-    "incremental_sales_rollup",  # last driver green: r6
-    "pipeline_compaction",  # last driver green: r6
-    "pipeline_partition_scan",  # last driver green: r6
-    "profile_documents",  # last driver green: r6
+    "text_repetition",  # last driver green: r13
+    "streaming_payment_match",  # last driver green: r13
+    "streaming_payment_match_outer",  # last driver green: r13
+    "streaming_payment_match_full",  # last driver green: r13
+    "streaming_topk_users",  # last driver green: r13
+    "streaming_running_totals_final",  # last driver green: r13
+    "streaming_dedup_replay",  # last driver green: r13
+    "streaming_hll_users",  # last driver green: r13
+    "streaming_sliding_1h_15m",  # last driver green: r13
+    "streaming_session_windows",  # last driver green: r13
+    "streaming_late_data_policy",  # last driver green: r13
+    "streaming_value_quantiles",  # last driver green: r13
+    "streaming_cusum_gate",  # last driver green: r13
+    "streaming_user_anomalies",  # last driver green: r13
+    "streaming_drift_tvd",  # last driver green: r13
+    "streaming_enriched_nation_totals",  # last driver green: r13
+    "ann_recall_audit",  # last driver green: r13
+    "ann_recall_clustered",  # last driver green: r13
+    "ann_label_audit",  # last driver green: r13
+    "ann_label_audit_clustered",  # last driver green: r13
+    "q10_returned_items",  # last driver green: r6
+    "q12_ship_delay_classes",  # last driver green: r6
+    "q5_local_supplier_volume",  # last driver green: r6
+    "q7_volume_shipping",  # last driver green: r6
+    "sales_pivot_by_priority",  # last driver green: r6
+    "salted_events_join",  # last driver green: r6
+    "salted_lineitem_agg",  # last driver green: r6
+    "salted_priority_sales",  # last driver green: r6
+    "sketch_distinct_trigrams",  # last driver green: r6
+    "sketch_value_quantiles",  # last driver green: r6
+    "sql_above_average_orders",  # last driver green: r6
+    "asof_priority_rates",  # last driver green: r7
+    "cdc_scd2_history",  # last driver green: r7
+    "cdc_snapshot_diff",  # last driver green: r7
+    "curation_pipeline",  # last driver green: r7
+    "curation_source_caps",  # last driver green: r7
+    "customer_rfm_segments",  # last driver green: r7
+    "customer_running_spend",  # last driver green: r7
+    "dedup_canonical_docs",  # last driver green: r7
+    "dedup_components_star",  # last driver green: r7
+    "dedup_contamination",  # last driver green: r7
+    "dedup_ensemble",  # last driver green: r7
+    "dedup_lsh_quality",  # last driver green: r7
+    "dedup_minhash_lsh",  # last driver green: r7
+    "dedup_ngram_jaccard",  # last driver green: r7
+    "dedup_semantic",  # last driver green: r7
+    "dedup_signal_agreement",  # last driver green: r7
+    "emb_bitext_mine",  # last driver green: r7
+    "emb_pq_codes",  # last driver green: r7
+    "events_active_users",  # last driver green: r7
 ]
 _GATE_TAIL = [
+    "customers_without_urgent_orders",  # last driver green: r13
+    "dedup_simhash_fingerprints",  # last driver green: r13
+    "dedup_simhash_pairs",  # last driver green: r13
+    "emb_near_dup",  # last driver green: r13
+    "emb_near_dup_lsh",  # last driver green: r13
+    "events_attribution",  # last driver green: r13
+    "events_sessionization",  # last driver green: r13
+    "events_type_mode",  # last driver green: r13
+    "events_type_value_quantiles",  # last driver green: r13
+    "events_user_gini",  # last driver green: r13
+    "events_value_histogram",  # last driver green: r13
+    "events_variant_props",  # last driver green: r13
+    "fuzzy_customer_names",  # last driver green: r13
+    "graph_degree_octaves",  # last driver green: r13
+    "graph_supplier_similarity",  # last driver green: r13
+    "incremental_sales_rollup",  # last driver green: r13
+    "mm_phash_distance_histogram",  # last driver green: r13
+    "mm_storage_profile",  # last driver green: r13
+    "orders_ship_latency",  # last driver green: r13
+    "pipeline_compaction",  # last driver green: r13
+    "pipeline_partition_scan",  # last driver green: r13
+    "profile_documents",  # last driver green: r13
+    "quality_calibration_matrix",  # last driver green: r13
+    "sketch_bloom_fpr",  # last driver green: r13
+    "streaming_asof_rates",  # last driver green: r13
+    "streaming_bloom_gate",  # last driver green: r13
+    "streaming_boilerplate_gate",  # last driver green: r13
+    "text_zipf_octaves",  # last driver green: r13
+    "warehouse_column_stats",  # last driver green: r13
+    "warehouse_partition_advisor",  # last driver green: r13
     "ann_filtered_recall_audit",  # last driver green: r12
     "ann_topk_brute",  # last driver green: r12
     "ann_topk_ivf",  # last driver green: r12
@@ -2992,25 +3024,6 @@ _GATE_TAIL = [
     "text_bpe_merges",  # last driver green: r8
     "text_dsir_importance",  # last driver green: r8
     "text_ngram_novelty",  # last driver green: r8
-    "asof_priority_rates",  # last driver green: r7
-    "cdc_scd2_history",  # last driver green: r7
-    "cdc_snapshot_diff",  # last driver green: r7
-    "curation_pipeline",  # last driver green: r7
-    "curation_source_caps",  # last driver green: r7
-    "customer_rfm_segments",  # last driver green: r7
-    "customer_running_spend",  # last driver green: r7
-    "dedup_canonical_docs",  # last driver green: r7
-    "dedup_components_star",  # last driver green: r7
-    "dedup_contamination",  # last driver green: r7
-    "dedup_ensemble",  # last driver green: r7
-    "dedup_lsh_quality",  # last driver green: r7
-    "dedup_minhash_lsh",  # last driver green: r7
-    "dedup_ngram_jaccard",  # last driver green: r7
-    "dedup_semantic",  # last driver green: r7
-    "dedup_signal_agreement",  # last driver green: r7
-    "emb_bitext_mine",  # last driver green: r7
-    "emb_pq_codes",  # last driver green: r7
-    "events_active_users",  # last driver green: r7
     "events_cohort_retention",  # last driver green: r7
     "events_concurrency_curve",  # last driver green: r7
     "events_range_follow",  # last driver green: r7
@@ -3028,17 +3041,6 @@ _GATE_TAIL = [
     "text_model_quality",  # last driver green: r7
     "text_quality_sample",  # last driver green: r7
     "top_orders_per_customer",  # last driver green: r7
-    "q10_returned_items",  # last driver green: r6
-    "q12_ship_delay_classes",  # last driver green: r6
-    "q5_local_supplier_volume",  # last driver green: r6
-    "q7_volume_shipping",  # last driver green: r6
-    "sales_pivot_by_priority",  # last driver green: r6
-    "salted_events_join",  # last driver green: r6
-    "salted_lineitem_agg",  # last driver green: r6
-    "salted_priority_sales",  # last driver green: r6
-    "sketch_distinct_trigrams",  # last driver green: r6
-    "sketch_value_quantiles",  # last driver green: r6
-    "sql_above_average_orders",  # last driver green: r6
 ]
 # --- END GENERATED GATE ORDER ---
 

@@ -1,8 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local tests run on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads in
-one JVM), but every config here is chosen to also make sense on a
-1000-executor cluster: AQE on (runtime coalescing + skew-join
+Local runs use ``local[$SPARK_GRAFT_CPUS]`` (default: one thread per
+core, in one JVM), but every config here is chosen to also make sense
+on a 1000-executor cluster: AQE on (runtime coalescing + skew-join
 handling), shuffle partitions sized to the parallelism, UTC session
 timezone (so results compare bit-exact against the DuckDB oracle,
 which is UTC-naive), and Arrow enabled for the few Pandas-UDF paths.
@@ -17,9 +17,9 @@ from pyspark.sql import SparkSession
 
 def _cpus() -> int:
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:
-        return 32
+        return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
+    except (KeyError, ValueError):
+        return os.cpu_count() or 1
 
 
 def get_spark(

@@ -55,6 +55,14 @@ def write_partitioned(
     ``maxRecordsPerFile`` bounds file sizes like the Firehose 128 MB
     buffer (main.tf:668) bounds flush sizes — at 100 TB you want many
     right-sized files per partition, not one giant or thousands tiny.
+
+    A partitioned write goes through one REBALANCE exchange on the
+    partition columns, so each partition value lands in one task and
+    one file (AQE still splits a skewed value across tasks at scale).
+    Without it every input task writes a file into every partition
+    directory it holds rows for: a 1,200-record micro-batch left ~160
+    files across the four tables instead of ~40. Spark drops the hint
+    when AQE is off, so results never depend on it.
     """
     if format not in COLUMNAR_FORMATS:
         raise ValueError(
@@ -62,6 +70,8 @@ def write_partitioned(
         )
     if partition_cols is None and table is not None:
         partition_cols = TABLE_PARTITIONS.get(table, [])
+    if partition_cols:
+        df = df.hint("rebalance", *partition_cols)
     writer = df.write.mode(mode).option("maxRecordsPerFile", max_records_per_file)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
@@ -124,59 +134,79 @@ def serving_upsert(
     scan is partition-pruned, and untouched bucket files are never
     opened, let alone rewritten. The touched-bucket list collected to
     the driver is bounded by ``n_buckets`` (partition metadata, not
-    data). Each bucket swap is a rename-aside (old dir renamed away,
-    new dir renamed in, aside deleted) — NOT atomic, but the
-    unrecoverable window is two pure renames and a crash never leaves
-    the store without the bucket's data on disk; cross-bucket
+    data). The dedup shuffle runs once (persisted for the bucket
+    collect, the anti-join keys and the new rows), and each rewritten
+    bucket is ONE file. Each bucket swap is a rename-aside (old dir
+    renamed away, new dir renamed in, aside deleted) — NOT atomic, but
+    the unrecoverable window is two pure renames and a crash never
+    leaves the store without the bucket's data on disk; cross-bucket
     atomicity needs a transactional format (``MERGE INTO`` on
     Delta/Iceberg — the documented production target), matching the
     reference's per-item (non-transactional) DynamoDB batch writes.
 
     Size ``n_buckets`` so a bucket ≈ one task's comfortable rewrite
     unit; at a larger store, raise it (resizing = one full rewrite, the
-    same migration path as the legacy flat layout below).
+    same migration path as the legacy flat layout).
     """
     deduped = batch.dropDuplicates(SERVING_KEYS).withColumn(
         "bucket", _bucket_expr(n_buckets)
     )
-    staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
+    _rewrite_buckets(spark, store_path, deduped, deduped, n_buckets)
 
-    # crash recovery FIRST — before any existence check or read: a
-    # prior run may have died inside a rename-aside window, leaving
-    # the only copy of the store (or of a bucket) under an aside name
+
+def _write_buckets(df: DataFrame, path: str) -> None:
+    """Bucketed store write: one REBALANCE on ``bucket`` puts each
+    bucket in one task, so each ``bucket=K`` dir gets one file."""
+    df.hint("rebalance", "bucket").write.mode("overwrite").partitionBy(
+        "bucket"
+    ).parquet(path)
+
+
+def _rewrite_buckets(
+    spark: SparkSession,
+    store_path: str,
+    keys: DataFrame,
+    rows: DataFrame,
+    n_buckets: int,
+) -> None:
+    """The rewrite both serving writers share: drop every key in
+    ``keys`` from its bucket, add ``rows`` (both carry ``bucket``) and
+    swap the touched buckets in. Crash recovery runs FIRST, before any
+    read: a prior run may have left the only copy of the store or of a
+    bucket under an aside name. A flat store (legacy, or just restored
+    by the recovery) is re-bucketed first, with no change fused in."""
     _recover_debris(store_path)
 
     if not os.path.exists(store_path):
-        deduped.write.mode("overwrite").partitionBy("bucket").parquet(store_path)
+        _write_buckets(rows, store_path)
         return
 
     if not _is_bucketed_layout(store_path):
-        # legacy flat store: one full merge-rewrite migrates it into the
-        # bucketed layout; every later upsert is partial.
-        existing = spark.read.parquet(store_path).withColumn(
+        flat = spark.read.parquet(store_path).withColumn(
             "bucket", _bucket_expr(n_buckets)
         )
-        survivors = existing.join(
-            F.broadcast(deduped.select(*SERVING_KEYS)), SERVING_KEYS, "left_anti"
-        )
-        merged = survivors.unionByName(deduped)
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+        staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
+        _write_buckets(flat, staging)
         _replace_store(staging, store_path)
-        return
 
-    touched = sorted(
-        r[0] for r in deduped.select("bucket").distinct().collect()
-    )
-    # partition-pruned scan: only the touched bucket dirs are read
-    existing = spark.read.parquet(store_path).filter(
-        F.col("bucket").isin(touched)
-    )
-    survivors = existing.join(
-        F.broadcast(deduped.select(*SERVING_KEYS)), SERVING_KEYS, "left_anti"
-    ).withColumn("bucket", F.col("bucket").cast("int"))
-    merged = survivors.unionByName(deduped)
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    _swap_buckets(staging, store_path, touched)
+    keys.persist()
+    try:
+        touched = sorted(r[0] for r in keys.select("bucket").distinct().collect())
+        if not touched:
+            return
+        # partition-pruned scan of the touched dirs; schema-inferred so
+        # a store/batch column mismatch fails loudly in unionByName
+        existing = spark.read.parquet(store_path).filter(
+            F.col("bucket").isin(touched)
+        )
+        survivors = existing.join(
+            F.broadcast(keys.select(*SERVING_KEYS)), SERVING_KEYS, "left_anti"
+        ).withColumn("bucket", F.col("bucket").cast("int"))
+        staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
+        _write_buckets(survivors.unionByName(rows), staging)
+        _swap_buckets(staging, store_path, touched)
+    finally:
+        keys.unpersist()
 
 
 def _restore_or_drop_aside(aside: str, primary: str) -> None:
@@ -309,36 +339,4 @@ def serving_apply_changes(
     all_keys = keyed.select(*SERVING_KEYS).withColumn(
         "bucket", _bucket_expr(n_buckets)
     )
-
-    # same crash recovery as serving_upsert, before any read
-    _recover_debris(store_path)
-
-    if not os.path.exists(store_path):
-        ups.write.mode("overwrite").partitionBy("bucket").parquet(store_path)
-        return
-
-    if not _is_bucketed_layout(store_path):
-        # a flat store can reach this path two ways: a legacy layout
-        # never upserted against, or a migration-crash restore by
-        # _recover_debris just above. Either way the bucketed read
-        # below would fail on the missing 'bucket' column — migrate
-        # first (pure re-bucket, no batch fused in), then apply the
-        # change feed through the normal partial path.
-        flat = spark.read.parquet(store_path).withColumn(
-            "bucket", _bucket_expr(n_buckets)
-        )
-        staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
-        flat.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        _replace_store(staging, store_path)
-
-    touched = sorted(r[0] for r in all_keys.select("bucket").distinct().collect())
-    if not touched:
-        return
-    existing = spark.read.parquet(store_path).filter(F.col("bucket").isin(touched))
-    survivors = existing.join(
-        F.broadcast(all_keys.select(*SERVING_KEYS)), SERVING_KEYS, "left_anti"
-    ).withColumn("bucket", F.col("bucket").cast("int"))
-    merged = survivors.unionByName(ups)
-    staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    _swap_buckets(staging, store_path, touched)
+    _rewrite_buckets(spark, store_path, all_keys, ups, n_buckets)

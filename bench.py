@@ -13,7 +13,7 @@ analytics queries them many times — SURVEY §3.2/§3.4):
 
 Usage: python bench.py
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local parallelism (default 32)
+  SPARK_GRAFT_CPUS    local parallelism (default: core count)
 
 Output: two JSON lines — a verbose one (full-precision seconds) and a
 compact FINAL one the driver parses from its 2000-char output tail:

@@ -15,9 +15,10 @@ ground truth:
 Run from the repo root: ``python scripts/gen_gate_head.py [--check]``.
 Default rewrites the generated block in registry.py in place;
 ``--check`` exits non-zero if the committed block differs from the
-regenerated one (the pytest rotation pin runs this mode, so a stale
-window fails the suite instead of silently dropping a query out of
-the driver's 50-entry view).
+one regenerated from the CORRECTNESS rounds that block names (the
+pytest rotation pin runs this mode, so a stale window fails the suite
+instead of silently dropping a query out of the 50-entry gate
+window, while a CORRECTNESS file added after generation does not).
 """
 
 from __future__ import annotations
@@ -66,34 +67,22 @@ MUST_ROTATE = [
 ]
 
 
-def _tracked_correctness() -> set[str]:
-    """Basenames of CORRECTNESS files known to git — a file the driver
-    deposited AFTER the builder's round close is untracked, and the
-    --check fallback ignores it so a fresh round doesn't start red
-    (r9 ADVICE). Round close still fails hard: by then the round's
-    file is committed and the strict compare governs."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "ls-files", "CORRECTNESS_r*.json"],
-            cwd=ROOT, capture_output=True, text=True, check=True,
-        ).stdout
-    except Exception:
-        return set()
-    return {os.path.basename(p) for p in out.split()}
+def correctness_files(rounds: list[int] | None = None) -> dict[int, str]:
+    """round -> CORRECTNESS file path; all rounds on disk, or only
+    ``rounds`` when given."""
+    out = {}
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        if rounds is None or rnd in rounds:
+            out[rnd] = path
+    return dict(sorted(out.items()))
 
 
-def last_green_rounds(tracked_only: bool = False) -> dict[str, int]:
+def last_green_rounds(files: dict[int, str]) -> dict[str, int]:
     """name -> highest round with a fully-green driver row (never-
     checked names are absent → treated as round 0 = stalest)."""
-    tracked = _tracked_correctness() if tracked_only else None
     out: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
-        if tracked is not None and os.path.basename(path) not in tracked:
-            continue
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1))
+    for rnd, path in files.items():
         try:
             data = json.load(open(path))
         except Exception:
@@ -111,14 +100,11 @@ def last_green_rounds(tracked_only: bool = False) -> dict[str, int]:
     return out
 
 
-def compute_order(
-    tracked_only: bool = False,
-) -> tuple[list[str], list[str], dict[str, int]]:
+def compute_order(greens: dict[str, int]) -> tuple[list[str], list[str]]:
     sys.path.insert(0, ROOT)
     from aws_kinesis_data_ingestion_restapi_spark.registry import QUERY_FNS
 
     names = list(QUERY_FNS)
-    greens = last_green_rounds(tracked_only=tracked_only)
     missing = [n for n in MUST_ROTATE if n not in names]
     assert not missing, f"MUST_ROTATE names not in registry: {missing}"
     rest = [n for n in names if n not in MUST_ROTATE]
@@ -129,10 +115,12 @@ def compute_order(
         (n for n in names if n not in head),
         key=lambda n: (-greens.get(n, 0), n),
     )
-    return head, tail, greens
+    return head, tail
 
 
-def render(head: list[str], tail: list[str], greens: dict[str, int]) -> str:
+def render(rounds: list[int]) -> str:
+    greens = last_green_rounds(correctness_files(rounds))
+    head, tail = compute_order(greens)
     n_new = sum(1 for n in MUST_ROTATE if greens.get(n, 0) == 0)
     n_changed = len(MUST_ROTATE) - n_new
     n_stale = WINDOW - len(MUST_ROTATE)
@@ -145,8 +133,9 @@ def render(head: list[str], tail: list[str], greens: dict[str, int]) -> str:
         % (n_new, n_changed),
         "# entries + the %d stalest driver greens (last green in"
         % n_stale,
-        "# round(s) %s, from CORRECTNESS_r*.json). Regenerate with"
-        % stale_rounds,
+        "# round(s) %s). Greens come from" % stale_rounds,
+        "# CORRECTNESS rounds %s;" % rounds,
+        "# --check rereads only those. Regenerate with",
         "#   python scripts/gen_gate_head.py",
         "# (pytest runs --check; hand-edits here go stale and FAIL).",
         "_GATE_HEAD = [",
@@ -163,30 +152,25 @@ def render(head: list[str], tail: list[str], greens: dict[str, int]) -> str:
 
 
 def main() -> int:
-    head, tail, greens = compute_order()
-    block = render(head, tail, greens)
     src = open(REGISTRY).read()
     pat = re.compile(
         r"# --- BEGIN GENERATED GATE ORDER.*?# --- END GENERATED GATE ORDER ---",
         re.S,
     )
     if "--check" in sys.argv:
+        # Regenerate from the rounds the committed block names, so a
+        # CORRECTNESS file deposited after generation cannot make the
+        # check fail; a changed registry or MUST_ROTATE still does.
         m = pat.search(src)
-        if m is None or m.group(0) != block:
-            # Tolerate staleness caused ONLY by a CORRECTNESS file the
-            # driver deposited after round close (untracked in git) —
-            # the next builder session regenerates before first commit.
-            head_t, tail_t, greens_t = compute_order(tracked_only=True)
-            if m is not None and m.group(0) == render(head_t, tail_t, greens_t):
-                print(
-                    "gate order current vs committed history "
-                    "(ignoring post-close driver CORRECTNESS deposit)"
-                )
-                return 0
+        named = m and re.search(r"CORRECTNESS rounds \[([\d, ]*)\]", m.group(0))
+        if not named or m.group(0) != render(
+            [int(r) for r in named.group(1).split(",") if r.strip()]
+        ):
             print("gate order is STALE — run: python scripts/gen_gate_head.py")
             return 1
         print("gate order up to date")
         return 0
+    block = render(list(correctness_files()))
     if pat.search(src):
         src = pat.sub(lambda _: block, src)
     else:
@@ -195,7 +179,7 @@ def main() -> int:
         assert hand.search(src), "no gate lists found to replace"
         src = hand.sub(lambda _: block, src)
     open(REGISTRY, "w").write(src)
-    print(f"wrote {WINDOW}-entry head + {len(tail)}-entry tail")
+    print(f"wrote the {WINDOW}-entry gate head from every CORRECTNESS round")
     return 0
 
 

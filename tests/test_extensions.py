@@ -2741,7 +2741,7 @@ def test_gate_head_is_generated_and_current():
     import subprocess
     import sys as _sys
 
-    root = "/root/repo"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     r = subprocess.run(
         [_sys.executable, "scripts/gen_gate_head.py", "--check"],
         cwd=root, capture_output=True, text=True,

@@ -424,6 +424,126 @@ def test_pipeline_restart_replays_exactly_once(spark, stream_dirs):
     assert set(r["bid"] for r in orders.select("bid").distinct().collect()) == {0, 1}
 
 
+def test_pipeline_sink_failure_fails_batch_and_restart_converges(
+    spark, stream_dirs, monkeypatch
+):
+    """The six sinks run concurrently, so a failing sink must still
+    fail the whole batch (after the others ended), and the restart
+    must replay that batch to the crash-free state: every table holds
+    each record once and the serving store every key once."""
+    from aws_kinesis_data_ingestion_restapi_spark.streaming import pipeline
+
+    d = stream_dirs
+    recs = envelope_records(12, seed=41)
+    _write_ndjson(os.path.join(d["input"], "b0.json"), recs)
+    real = pipeline.write_partitioned
+    failed = []
+
+    def flaky(df, path, **kwargs):
+        if kwargs.get("table") == "shipping_addresses" and not failed:
+            failed.append(path)
+            raise RuntimeError("injected sink failure")
+        return real(df, path, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_partitioned", flaky)
+    with pytest.raises(Exception) as err:
+        _run(spark, d)
+    assert failed and "injected sink failure" in str(err.value)
+
+    _run(spark, d)
+    for table, n in (("orders", 12), ("product_details", 24),
+                     ("shipping_addresses", 12), ("purchase_details", 12)):
+        assert spark.read.parquet(f"{d['warehouse']}/{table}").count() == n
+    keys = {
+        (json.loads(base64.b64decode(r["Data"]))["customer_id"],
+         json.loads(base64.b64decode(r["Data"]))["order_id"])
+        for r in recs
+    }
+    got = [
+        (r["customer_id"], r["order_id"])
+        for r in spark.read.parquet(d["serving"]).collect()
+    ]
+    assert len(got) == len(keys) and set(got) == keys
+
+
+def test_pipeline_sinks_run_in_the_query_job_group(
+    spark, stream_dirs, monkeypatch
+):
+    """Each sink thread inherits the streaming query's job group, so
+    ``query.stop()`` cancels in-flight writes and the group's job list
+    covers every sink's jobs."""
+    from aws_kinesis_data_ingestion_restapi_spark.streaming import pipeline
+
+    d = stream_dirs
+    _write_ndjson(
+        os.path.join(d["input"], "b0.json"), envelope_records(10, seed=42)
+    )
+    seen = []
+    for name in ("write_errors", "write_partitioned", "serving_upsert"):
+        def spy(*args, _real=getattr(pipeline, name), _name=name, **kwargs):
+            group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+            seen.append((kwargs.get("table", _name), group))
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline, name, spy)
+    p = pipeline.IngestionPipeline(
+        spark, d["warehouse"], serving_path=d["serving"],
+        errors_path=d["errors"], with_partitions=False,
+    )
+    q = p.start(
+        read_envelope_stream(spark, d["input"]),
+        checkpoint=d["checkpoint"], trigger={"availableNow": True},
+    )
+    try:
+        assert q.awaitTermination(300), "drain timed out"
+    finally:
+        q.stop()
+    run_id = str(q.runId)
+    assert len({sink for sink, _ in seen}) == 6, seen
+    assert all(group == run_id for _, group in seen), seen
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(run_id)
+    assert len(jobs) >= len(seen), (jobs, seen)
+
+
+def test_pipeline_writes_one_file_per_partition_value(spark, stream_dirs):
+    """A batch read from several input files still writes ONE parquet
+    file per partition directory of every table, and after several
+    upserts each serving bucket holds one file."""
+    d = stream_dirs
+    recs = envelope_records(80, seed=43)
+    for i in range(4):
+        _write_ndjson(
+            os.path.join(d["input"], f"b{i}.json"), recs[i * 15:(i + 1) * 15]
+        )
+
+    def run():
+        run_pipeline_once(
+            spark, d["input"], d["warehouse"], d["checkpoint"],
+            serving_path=d["serving"], with_partitions=True,
+        )
+
+    def parquet_files_per_dir(root):
+        return {
+            dirpath: sum(f.endswith(".parquet") for f in files)
+            for dirpath, _, files in os.walk(root)
+            if any(f.endswith(".parquet") for f in files)
+        }
+
+    run()
+    # orders is partitioned by customer_id: many directories per batch
+    assert len(parquet_files_per_dir(f"{d['warehouse']}/orders")) > 10
+    for table in ("orders", "product_details", "shipping_addresses",
+                  "purchase_details"):
+        per_dir = parquet_files_per_dir(f"{d['warehouse']}/{table}")
+        assert set(per_dir.values()) == {1}, (table, per_dir)
+    for i, chunk in enumerate((recs[60:70], recs[70:80]), start=4):
+        _write_ndjson(os.path.join(d["input"], f"b{i}.json"), chunk)
+        run()
+    per_bucket = parquet_files_per_dir(d["serving"])
+    assert len(per_bucket) > 1 and set(per_bucket.values()) == {1}, per_bucket
+    assert spark.read.parquet(d["serving"]).count() == 80
+
+
 def test_pipeline_runs_on_continuous_rate_source(spark, tmp_path):
     """The full 4-table fan-out driven by a CONTINUOUS unbounded source
     (Spark's rate source) — the deployment shape the Kinesis connector
