@@ -3316,8 +3316,8 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         S_t = P_t − min(0, min_{j≤t} P_j),  P_t = Σ_{i≤t} z_i
     (induction: max(0, P_{t−1} − m_{t−1} + z_t) = P_t − min(P_t,
     m_{t−1})), so the whole detector is TWO window passes over the
-    day table — prefix sum, then running min — no
-    applyInPandasWithState, no bounded-horizon approximation, and a
+    day table — prefix sum, then running min — no user-defined
+    keyed state, no bounded-horizon approximation, and a
     FULL value oracle instead of a rows-only check.
 
     Exact integer arithmetic end to end: with baseline (first

@@ -532,7 +532,7 @@ QUERY_FNS: dict[str, QueryFn] = {
 }
 
 # Stateful streaming operators, driven through a real streaming query
-# (file source → applyInPandasWithState → memory sink). The state
+# (file source → built-in keyed state → memory sink). The state
 # MECHANISM is not SQL-expressible, but the drained final results are:
 # dedup-under-replay drains to one row per distinct key (both
 # deliveries identical), and running totals drain to exactly 2× the

@@ -4,9 +4,9 @@
 ``(spark, sf_dir)``; these adapters drive the real streaming operators
 (``streaming/stateful.py``) through an actual Structured Streaming
 query — file source, micro-batches, checkpoint, state store — and
-return the drained result. The cross-batch MECHANISM (state store,
-timeouts) is not SQL-expressible, but the two drained RESULTS here are
-plain SQL over ``orders`` — see the ``streaming_*`` entries in
+return the drained result. The cross-batch MECHANISM (keyed state
+store, watermarks) is not SQL-expressible, but the two drained RESULTS
+here are plain SQL over ``orders`` — see the ``streaming_*`` entries in
 registry.ORACLE_SQL, which upgrade both from rows-only to full
 value-hash checks.
 
@@ -18,7 +18,8 @@ semantics, not just the plumbing:
   exactly once although every record arrives twice → row count ==
   distinct keys, and a second emission of any key would double it.
 - ``streaming_running_totals_final``: per-customer totals after both
-  deliveries → every count is exactly 2× the per-customer order count.
+  deliveries, drained in complete mode → every count is exactly 2× the
+  per-customer order count.
 
 The memory-sink collect is harness-side (bounded by the sf of the
 gate); the operators themselves never touch the driver.
@@ -45,7 +46,7 @@ from aws_kinesis_data_ingestion_restapi_spark.streaming.enrichment import (
     enrich_stream,
 )
 from aws_kinesis_data_ingestion_restapi_spark.streaming.stateful import (
-    streaming_dedup_builtin,
+    streaming_dedup,
     streaming_running_totals,
 )
 
@@ -306,14 +307,9 @@ def streaming_enriched_nation_totals(spark: SparkSession, sf_dir: str) -> DataFr
 def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-batch streaming dedup under replay: every order delivered
     twice (two micro-batches), emitted once. Row count == distinct
-    (customer_id, order_id) pairs in sf_dir's orders.
-
-    Uses the engine-native keyed-state form
-    (``streaming_dedup_builtin`` — JVM state store, measured ~10×
-    faster than the applyInPandasWithState form, which stays
-    unit-tested for the custom-state cases)."""
+    (customer_id, order_id) pairs in sf_dir's orders."""
     stream, d = _order_stream(spark, sf_dir, replays=2)
-    deduped = streaming_dedup_builtin(stream)
+    deduped = streaming_dedup(stream)
     out = _drain(deduped, "append", "sdedup", cleanup_dir=d,
                  state_feed_dirs=[d])
     return out
@@ -321,9 +317,9 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_running_totals_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer running totals after two full deliveries of the
-    order stream. The memory sink keeps every update emission; totals
-    are monotone, so max() per customer is the final state — each
-    n_orders is exactly 2× the customer's order count."""
+    order stream, drained in complete mode so the memory sink holds
+    exactly the final state — each n_orders is exactly 2× the
+    customer's order count."""
     stream, d = _order_stream(spark, sf_dir, replays=2)
     # streaming_running_totals reads purchaise_details.amount; rebuild
     # the nested shape from the flat stream columns
@@ -332,16 +328,9 @@ def streaming_running_totals_final(spark: SparkSession, sf_dir: str) -> DataFram
         F.struct(F.col("amount")).alias("purchaise_details"),
     )
     totals = streaming_running_totals(nested)
-    drained = _drain(totals, "update", "stotals", cleanup_dir=d,
-                     state_feed_dirs=[d])
-    return (
-        drained.groupBy("customer_id")
-        .agg(
-            F.max("n_orders").alias("n_orders"),
-            F.max("total_amount").alias("total_amount"),
-        )
-        .orderBy("customer_id")
-    )
+    out = _drain(totals, "complete", "stotals", cleanup_dir=d,
+                 state_feed_dirs=[d])
+    return out.orderBy("customer_id")
 
 
 def _payment_match_streams(spark: SparkSession, sf_dir: str, prefix: str):
@@ -566,7 +555,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     under a 1-hour watermark, append mode — the JVM keyed-state merge
     path (dynamic-gap window coalescing), complementing the batch
     ``events_sessionization`` (same operator, batch plan) and the
-    applyInPandasWithState operators (custom state logic).
+    keyed-state operators of ``streaming/stateful.py`` (dedup, running
+    totals).
 
     Emission boundary: a session finalizes once the watermark passes
     its end (last event + gap). The drain delivers every event in one
@@ -733,8 +723,7 @@ def streaming_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the signature verify are stream-static joins, and the τ ≥ 0.5
     filter prunes in-batch. The drained match rows are then reduced
     batch-side to the per-document verdict (best corpus match: est
-    DESC, match_id — the X90 tie-break), exactly the
-    streaming_running_totals_final drain-then-reduce pattern.
+    DESC, match_id — the X90 tie-break): drain, then reduce.
 
     Replay-idempotence is proven by the gate itself: the fixture
     delivers the delta TWICE (two identical micro-batches) while the

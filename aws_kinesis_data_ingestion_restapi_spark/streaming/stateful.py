@@ -1,4 +1,4 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Cross-batch streaming operators on the engine's built-in keyed state.
 
 The reference pipeline is stateless per record (each Lambda invocation
 sees only its batch; the only cross-batch memory is DynamoDB's upsert
@@ -13,175 +13,54 @@ operators add the cross-batch state the north star needs:
   amount — the stateful serving-view aggregate (what the reference
   approximates by re-reading DynamoDB).
 
-Scale design: state lives per grouping key in the state store
+Both are plain DataFrame operators (``dropDuplicates`` and a streaming
+``groupBy().agg()``), so their state lives in the JVM state store
 (RocksDB-backed on a real cluster via
 ``spark.sql.streaming.stateStore.providerClass``), partitioned by the
-shuffle on the group key — no driver state, no global structures. Both
-operators take a ``GroupStateTimeout.ProcessingTimeTimeout`` TTL so
-state is bounded when keys churn (at 100 TB an unbounded key space
-must expire or the state store grows forever); pass ``ttl_ms=None``
-for the small-keyspace case where state must never expire.
-
-``applyInPandasWithState`` is the Arrow-batched path (pandas per
-group-batch); Spark 4 offers ``transformWithStateInPandas`` with
-richer state types, but in this build its Python driver worker
-crashes on a minimal ValueState processor ("TransformWithStateInPySpark
-driver worker exited unexpectedly", RocksDB provider set as required),
-so this module sticks to the older API — which exists on both 3.4+
-and 4.x and passes the full replay/TTL test matrix here.
+shuffle on the key, with no Python worker in the per-record path. A
+watermark is what bounds state: pass ``watermark=(ts_col, delay)`` to
+the dedup when the key space churns.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING, Any
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from pyspark.sql import functions as F
 
 
 def streaming_dedup(
     events: DataFrame,
     key_cols: tuple[str, ...] = ("customer_id", "order_id"),
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """First-occurrence-only filter across micro-batches.
-
-    Replays of a key already seen in ANY earlier batch are dropped, so
-    an at-least-once source feeds exactly-once-per-key sinks. Output
-    schema == input schema. State per key: a single marker (plus an
-    occurrence counter for observability) — O(distinct keys), the
-    minimum any exact cross-batch dedup can hold.
-    """
-    schema = events.schema
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def first_only(
-        key: tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        seen = state.exists
-        emitted = False
-        for pdf in pdfs:
-            if len(pdf) and not seen and not emitted:
-                yield pdf.iloc[[0]]
-                emitted = True
-        if not seen:
-            state.update((1,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-
-    return events.groupBy(*key_cols).applyInPandasWithState(
-        first_only,
-        outputStructType=schema,
-        stateStructType="n long",
-        outputMode="append",
-        timeoutConf=timeout,
-    )
-
-
-RUNNING_TOTALS_SCHEMA = (
-    "customer_id string, n_orders long, total_amount double"
-)
-
-
-def streaming_running_totals(
-    events: DataFrame,
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """Per-customer running (n_orders, total_amount) emitted every
-    micro-batch the customer appears in — the custom-stateful form of
-    the serving view's read-modify-write pattern.
-
-    Amounts accumulate in integer cents inside the state tuple, so the
-    running sum is exact regardless of batch order; only the emitted
-    value divides back to a double.
-    """
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def accumulate(
-        key: tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, cents = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            # Round each amount to cents BEFORE summing: summing doubles
-            # first would reintroduce fp error (and batch-boundary
-            # dependence) for large batches, breaking the exactness
-            # contract above.
-            cents += int(pdf["_amount"].mul(100).round().astype("int64").sum())
-        state.update((n, cents))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(
-            [{"customer_id": key[0], "n_orders": n, "total_amount": cents / 100.0}]
-        )
-
-    from pyspark.sql import functions as F
-
-    keyed = events.select(
-        "customer_id",
-        F.col("purchaise_details.amount").cast("double").alias("_amount"),
-    )
-    return keyed.groupBy("customer_id").applyInPandasWithState(
-        accumulate,
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        stateStructType="n long, cents long",
-        outputMode="update",
-        timeoutConf=timeout,
-    )
-
-
-def streaming_dedup_builtin(
-    events: DataFrame,
-    key_cols: tuple[str, ...] = ("customer_id", "order_id"),
     watermark: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """Cross-batch first-occurrence dedup via the engine-native
-    ``dropDuplicates`` — JVM keyed state store, zero Python in the
-    per-record path.
+    """First-occurrence-only filter across micro-batches: replays of a
+    key already seen in ANY earlier batch are dropped, so an
+    at-least-once source feeds exactly-once-per-key sinks. Output
+    schema == input schema; state is one entry per distinct key.
 
-    Same observable semantics as :func:`streaming_dedup` (one emission
-    per key, replays dropped), ~10× faster measured at sf0.1 because
-    state access never crosses the JVM/Arrow boundary per group. This
-    is the default choice; reach for :func:`streaming_dedup` only when
-    the state logic outgrows what dropDuplicates expresses (per-key
-    TTL independent of event time, occurrence counters, custom
-    emission). Pass ``watermark=(ts_col, delay)`` to bound state by
-    event time (the native analog of the custom form's TTL).
-    """
+    ``watermark=(ts_col, delay)`` bounds state by event time."""
     if watermark is not None:
         # dropDuplicates does NOT evict keyed state when the watermark
         # advances unless the event-time column is part of the key
         # subset — plain dropDuplicates under a watermark would grow
-        # state with every distinct key forever, the exact failure
-        # this parameter exists to prevent. WithinWatermark is the
-        # real native TTL: a key's state drops once the watermark
-        # passes its event time + delay (a far-later replay re-emits
-        # — the same contract as the custom form's TTL).
+        # state with every distinct key forever. WithinWatermark drops
+        # a key's state once the watermark passes its event time +
+        # delay (a far-later replay then re-emits).
         events = events.withWatermark(*watermark)
         return events.dropDuplicatesWithinWatermark(list(key_cols))
     return events.dropDuplicates(list(key_cols))
 
+
+def streaming_running_totals(events: DataFrame) -> DataFrame:
+    """Per-customer running (n_orders, total_amount), emitted in update
+    mode every micro-batch the customer appears in — the streaming form
+    of the serving view's read-modify-write pattern.
+
+    Each amount is rounded to integer cents (HALF_EVEN) BEFORE summing,
+    so the running sum is exact regardless of batch order; only the
+    emitted value divides back to a double."""
+    cents = F.bround(F.col("purchaise_details.amount").cast("double") * 100)
+    return events.groupBy("customer_id").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        (F.sum(cents.cast("long")) / 100.0).alias("total_amount"),
+    )

@@ -269,7 +269,7 @@ def test_streaming_dedup_on_rocksdb_state_store(spark, tmp_path):
         _order_stream,
     )
     from aws_kinesis_data_ingestion_restapi_spark.streaming.stateful import (
-        streaming_dedup_builtin,
+        streaming_dedup,
     )
 
     key = "spark.sql.streaming.stateStore.providerClass"
@@ -281,7 +281,7 @@ def test_streaming_dedup_on_rocksdb_state_store(spark, tmp_path):
     spark.conf.set(key, rocks)
     try:
         stream, d = _order_stream(spark, "/root/testdata/sf0.001", replays=2)
-        out = _drain(streaming_dedup_builtin(stream), "append", "rocksdedup")
+        out = _drain(streaming_dedup(stream), "append", "rocksdedup")
         n = out.count()
         orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
         assert n == orders.select("o_custkey", "o_orderkey").distinct().count()
@@ -304,7 +304,7 @@ def test_streaming_dedup_watermark_bounds_state(spark):
         _order_stream,
     )
     from aws_kinesis_data_ingestion_restapi_spark.streaming.stateful import (
-        streaming_dedup_builtin,
+        streaming_dedup,
     )
 
     from pyspark.sql import functions as F
@@ -313,7 +313,7 @@ def test_streaming_dedup_watermark_bounds_state(spark):
     stream = stream.withColumn(
         "o_ts", F.to_timestamp(F.regexp_replace("order_date", "Z+$", ""))
     )
-    deduped = streaming_dedup_builtin(
+    deduped = streaming_dedup(
         stream, watermark=("o_ts", "10 minutes")
     )
     plan = deduped._jdf.queryExecution().logical().toString()
