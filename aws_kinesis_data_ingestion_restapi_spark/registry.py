@@ -368,8 +368,8 @@ def serving_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Simulates an at-least-once redelivery: every order arrives twice,
     the second time with status='shipped' (batch_seq 2). The upsert
     result keeps exactly the newest version per (customer_id, order_id)
-    — the same dedup rule streaming/sinks.serving_upsert applies per
-    micro-batch, here in its scalable shuffle-once window form.
+    — the very rule sinks.serving_upsert applies per micro-batch: one
+    row_number window per key behind one shuffle, newest version first.
     """
     from pyspark.sql.window import Window
 

@@ -12,9 +12,11 @@ this environment, the MERGE is emulated with a hash-bucketed partial
 rewrite: the store is laid out as ``bucket=K/`` Hive partitions keyed
 by ``pmod(xxhash64(keys), n_buckets)``, and an upsert rewrites ONLY the
 buckets the batch touches — untouched bucket files stay byte-identical.
-Rewrite cost scales with the batch's key spread, not the store size
-(the parquet analog of DynamoDB touching only the written partitions;
-on Delta/Iceberg the same logic is ``MERGE INTO``).
+The rewrite is one keyed merge behind one shuffle on ``bucket``: stored
+and new rows meet in a last-write-wins window per key. Rewrite cost
+scales with the batch's key spread, not the store size (the parquet
+analog of DynamoDB touching only the written partitions; on
+Delta/Iceberg the same logic is ``MERGE INTO``).
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from aws_kinesis_data_ingestion_restapi_spark.schema import TABLE_PARTITIONS
 
@@ -125,88 +128,89 @@ def serving_upsert(
 
     Semantics (lambda_kinesis_consumer:48 + at-least-once Kinesis):
     last-write-wins per (customer_id, order_id); replaying a batch is a
-    no-op. Batch-internal dups are collapsed first (put_item order
-    within one poll is arbitrary in the reference too).
+    no-op. Batch-internal dups collapse to one of their rows (put_item
+    order within one poll is arbitrary in the reference too).
 
     Scale design: the store is hash-bucketed on the key
     (``bucket=pmod(xxhash64(keys), n_buckets)`` Hive partitions). An
-    upsert reads and rewrites ONLY the touched buckets — the anti-join
-    scan is partition-pruned, and untouched bucket files are never
-    opened, let alone rewritten. The touched-bucket list collected to
-    the driver is bounded by ``n_buckets`` (partition metadata, not
-    data). The dedup shuffle runs once (persisted for the bucket
-    collect, the anti-join keys and the new rows), and each rewritten
-    bucket is ONE file. Each bucket swap is a rename-aside (old dir
-    renamed away, new dir renamed in, aside deleted) — NOT atomic, but
-    the unrecoverable window is two pure renames and a crash never
-    leaves the store without the bucket's data on disk; cross-bucket
-    atomicity needs a transactional format (``MERGE INTO`` on
-    Delta/Iceberg — the documented production target), matching the
-    reference's per-item (non-transactional) DynamoDB batch writes.
+    upsert reads and rewrites ONLY the touched buckets, as one keyed
+    merge behind one shuffle (:func:`_rewrite_buckets`); untouched
+    bucket files are never opened, and the touched-bucket list
+    collected to the driver is bounded by ``n_buckets``. Each bucket
+    swap is a rename-aside (old dir renamed away, new dir renamed in,
+    aside deleted) — NOT atomic, but the unrecoverable window is two
+    pure renames and a crash never leaves the store without the
+    bucket's data on disk; cross-bucket atomicity needs a transactional
+    format (``MERGE INTO`` on Delta/Iceberg — the documented production
+    target), matching the reference's per-item (non-transactional)
+    DynamoDB batch writes.
 
     Size ``n_buckets`` so a bucket ≈ one task's comfortable rewrite
     unit; at a larger store, raise it (resizing = one full rewrite, the
     same migration path as the legacy flat layout).
     """
-    deduped = batch.dropDuplicates(SERVING_KEYS).withColumn(
-        "bucket", _bucket_expr(n_buckets)
-    )
-    _rewrite_buckets(spark, store_path, deduped, deduped, n_buckets)
+    new = batch.withColumn("_del", F.lit(False))
+    _rewrite_buckets(spark, store_path, new, n_buckets)
 
 
 def _write_buckets(df: DataFrame, path: str) -> None:
-    """Bucketed store write: one REBALANCE on ``bucket`` puts each
-    bucket in one task, so each ``bucket=K`` dir gets one file."""
-    df.hint("rebalance", "bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
+    """Bucketed store write. Callers ``repartition("bucket")`` first,
+    so each bucket sits in one task and each ``bucket=K`` dir gets one
+    file, with AQE on or off."""
+    df.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
 def _rewrite_buckets(
-    spark: SparkSession,
-    store_path: str,
-    keys: DataFrame,
-    rows: DataFrame,
-    n_buckets: int,
+    spark: SparkSession, store_path: str, new: DataFrame, n_buckets: int
 ) -> None:
-    """The rewrite both serving writers share: drop every key in
-    ``keys`` from its bucket, add ``rows`` (both carry ``bucket``) and
-    swap the touched buckets in. Crash recovery runs FIRST, before any
-    read: a prior run may have left the only copy of the store or of a
-    bucket under an aside name. A flat store (legacy, or just restored
-    by the recovery) is re-bucketed first, with no change fused in."""
+    """The keyed merge both serving writers share. ``new`` holds the
+    change rows plus a boolean ``_del`` (a tombstone). Per key of a
+    touched bucket one row survives, a ``new`` row over a stored one;
+    a surviving tombstone is dropped (a bucket left empty is removed).
+
+    Crash recovery runs FIRST, before any read: a prior run may have
+    left the only copy of the store or of a bucket under an aside
+    name. A flat store (legacy, or just restored by the recovery) is
+    re-bucketed first, with no change fused in.
+
+    One shuffle: the stored rows of the touched buckets (a
+    partition-pruned, schema-inferred read, so a store/batch column
+    mismatch fails loudly in ``unionByName``) and ``new`` are
+    hash-partitioned on ``bucket``, which also satisfies the window
+    (keyed on ``bucket`` + keys) and the partitioned write."""
     _recover_debris(store_path)
-
-    if not os.path.exists(store_path):
-        _write_buckets(rows, store_path)
-        return
-
-    if not _is_bucketed_layout(store_path):
-        flat = spark.read.parquet(store_path).withColumn(
-            "bucket", _bucket_expr(n_buckets)
-        )
-        staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
-        _write_buckets(flat, staging)
-        _replace_store(staging, store_path)
-
-    keys.persist()
-    try:
-        touched = sorted(r[0] for r in keys.select("bucket").distinct().collect())
+    merged = new.withColumns({"bucket": _bucket_expr(n_buckets), "_new": F.lit(1)})
+    target, touched = store_path, None
+    if os.path.exists(store_path):
+        if not _is_bucketed_layout(store_path):
+            flat = spark.read.parquet(store_path).withColumn(
+                "bucket", _bucket_expr(n_buckets)
+            )
+            staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
+            _write_buckets(flat.repartition("bucket"), staging)
+            _replace_store(staging, store_path)
+        # inferred before the collect: its footer-read job then runs
+        # while the collect still waits on the batch's first read
+        stored = spark.read.parquet(store_path)
+        touched = sorted(r[0] for r in merged.select("bucket").distinct().collect())
         if not touched:
             return
-        # partition-pruned scan of the touched dirs; schema-inferred so
-        # a store/batch column mismatch fails loudly in unionByName
-        existing = spark.read.parquet(store_path).filter(
-            F.col("bucket").isin(touched)
+        existing = stored.filter(F.col("bucket").isin(touched)).withColumns(
+            {"bucket": F.col("bucket").cast("int"), "_del": F.lit(False),
+             "_new": F.lit(0)}
         )
-        survivors = existing.join(
-            F.broadcast(keys.select(*SERVING_KEYS)), SERVING_KEYS, "left_anti"
-        ).withColumn("bucket", F.col("bucket").cast("int"))
-        staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
-        _write_buckets(survivors.unionByName(rows), staging)
-        _swap_buckets(staging, store_path, touched)
-    finally:
-        keys.unpersist()
+        merged = existing.unionByName(merged)
+        target = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
+    w = Window.partitionBy("bucket", *SERVING_KEYS).orderBy(F.desc("_new"))
+    _write_buckets(
+        merged.repartition("bucket")
+        .withColumn("_rn", F.row_number().over(w))
+        .filter((F.col("_rn") == 1) & ~F.col("_del"))
+        .drop("_rn", "_new", "_del"),
+        target,
+    )
+    if touched is not None:
+        _swap_buckets(target, store_path, touched)
 
 
 def _restore_or_drop_aside(aside: str, primary: str) -> None:
@@ -322,21 +326,16 @@ def serving_apply_changes(
     stays key-sized); deletes remove the key. Replaying the same feed
     is a no-op (idempotent, like serving_upsert).
 
-    Scale shape mirrors serving_upsert: only the buckets touched by
-    ANY change are scanned (partition-pruned) and rewritten; the
-    touched-bucket list is bounded by ``n_buckets``. A bucket whose
-    rows are all deleted is dropped from the store entirely.
+    Same keyed merge as serving_upsert: a delete is a keys-only
+    tombstone that beats the stored row and is then dropped, so only
+    the buckets touched by ANY change are scanned and rewritten, and a
+    bucket whose rows are all deleted is dropped from the store.
     """
-    keyed = changes.filter(
-        F.col("change_type").isin("insert", "update", "delete")
-    ).dropDuplicates(SERVING_KEYS)
+    keyed = changes.filter(F.col("change_type").isin("insert", "update", "delete"))
+    is_del = F.col("change_type") == "delete"
     ups = new_snapshot.join(
-        F.broadcast(
-            keyed.filter(F.col("change_type") != "delete").select(*SERVING_KEYS)
-        ),
-        SERVING_KEYS,
-    ).withColumn("bucket", _bucket_expr(n_buckets))
-    all_keys = keyed.select(*SERVING_KEYS).withColumn(
-        "bucket", _bucket_expr(n_buckets)
-    )
-    _rewrite_buckets(spark, store_path, all_keys, ups, n_buckets)
+        keyed.filter(~is_del).select(*SERVING_KEYS), SERVING_KEYS, "left_semi"
+    ).withColumn("_del", F.lit(False))
+    tombstones = keyed.filter(is_del).select(*SERVING_KEYS, F.lit(True).alias("_del"))
+    new = ups.unionByName(tombstones, allowMissingColumns=True)
+    _rewrite_buckets(spark, store_path, new, n_buckets)

@@ -35,8 +35,9 @@ derivations are codegen'd column expressions, and the six sinks run
 concurrently, like the reference's consumers of one Kinesis record.
 Each partitioned table write adds one REBALANCE exchange on its
 partition columns (one file per partition value); the serving upsert
-adds its keyed dedup and one REBALANCE on the bucket. The only data
-collected to the driver is the touched-bucket list (at most
+is one keyed merge behind one hash exchange on the bucket (one file
+per touched bucket, five Spark jobs into an existing store). The only
+data collected to the driver is the touched-bucket list (at most
 ``n_buckets`` ints).
 """
 

@@ -91,6 +91,71 @@ def test_upsert_replay_is_idempotent_bucketed(spark, tmp_path):
     assert serving.dropDuplicates(SERVING_KEYS).count() == len(keys)
 
 
+def test_upsert_collapses_batch_internal_duplicates(spark, tmp_path):
+    """Inside one batch a key may arrive twice: exactly one of its batch
+    rows lands, over the stored row; a stored key given once takes the
+    batch row."""
+    store = str(tmp_path / "serving")
+    keys = [(f"c{i}", f"o{i}") for i in range(50)]
+    serving_upsert(spark, _rows(spark, keys, "pending"), store, n_buckets=N_BUCKETS)
+    batch = spark.createDataFrame(
+        [("c1", "o1", "packed"), ("c1", "o1", "shipped"), ("c2", "o2", "shipped")],
+        "customer_id string, order_id string, status string",
+    )
+    serving_upsert(spark, batch, store, n_buckets=N_BUCKETS)
+    got = {
+        (r["customer_id"], r["order_id"]): r["status"]
+        for r in spark.read.parquet(store).collect()
+    }
+    assert spark.read.parquet(store).count() == len(got) == len(keys)
+    assert got[("c1", "o1")] in ("packed", "shipped")
+    assert got[("c2", "o2")] == "shipped"
+    assert sum(v == "pending" for v in got.values()) == len(keys) - 2
+
+
+def test_upsert_into_existing_store_runs_at_most_five_jobs(spark, tmp_path):
+    """The merge is one touched-bucket collect, one schema-inferred
+    scan and one write behind a single shuffle: with AQE each shuffle
+    stage is its own job, so 2 + 1 + 2."""
+    store = str(tmp_path / "serving")
+    keys = [(f"c{i}", f"o{i}") for i in range(200)]
+    serving_upsert(spark, _rows(spark, keys, "pending"), store, n_buckets=N_BUCKETS)
+    sc = spark.sparkContext
+    group = f"upsert-{tmp_path.name}"
+    sc.setJobGroup(group, "serving upsert job count")
+    try:
+        serving_upsert(
+            spark, _rows(spark, keys[:100], "shipped"), store, n_buckets=N_BUCKETS
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 5, sorted(jobs)
+    assert spark.read.parquet(store).filter(F.col("status") == "shipped").count() == 100
+
+
+def test_upsert_writes_one_file_per_bucket_without_aqe(spark, tmp_path):
+    """``repartition("bucket")`` puts each bucket in one task whatever
+    the AQE setting; a rebalance hint is dropped when AQE is off, and
+    every input task then writes its own file into each bucket."""
+    store = str(tmp_path / "serving")
+    keys = [(f"c{i}", f"o{i}") for i in range(200)]
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for lo, status in ((0, "pending"), (100, "shipped")):
+            batch = _rows(spark, keys[lo:], status).repartition(3)
+            assert batch.rdd.getNumPartitions() > 1
+            serving_upsert(spark, batch, store, n_buckets=N_BUCKETS)
+            dirs = glob.glob(os.path.join(store, "bucket=*"))
+            assert len(dirs) == N_BUCKETS
+            for d in dirs:
+                assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert spark.read.parquet(store).count() == len(keys)
+
+
 def test_upsert_migrates_legacy_flat_store(spark, tmp_path):
     """A pre-bucketing flat store is merged and migrated into the
     bucketed layout on the first upsert; later upserts are partial."""
