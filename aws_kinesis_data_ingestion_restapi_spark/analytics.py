@@ -2394,7 +2394,7 @@ def salted_events_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     key shape where a shuffle join serializes each key through one
     reducer (5 types ⇒ parallelism 5). salted_join spreads every key
     over n_salts reducers (measured 2.9× on a 50%-hot-key fixture,
-    scripts/skew_bench.py → BENCH_NOTES r5); the oracle is the PLAIN
+    BENCH_NOTES "Skew-resilience proof", r5); the oracle is the PLAIN
     join — proving the salt changes only the shuffle shape, never a
     bit of the result. Weighted sum runs in exact decimal."""
     from aws_kinesis_data_ingestion_restapi_spark.operators.scale import (
@@ -2466,7 +2466,7 @@ def salted_lineitem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay in exact decimal until the final double cast).
 
     Honest scale note (scale.salted_agg docstring, measured in
-    scripts/skew_bench.py): for re-aggregable functions Spark's
+    BENCH_NOTES "Skew-resilience proof"): for re-aggregable functions Spark's
     map-side partial aggregation already absorbs hot keys, so this
     form is for composed partials that must stay keyed by
     (key, salt) — the query exists to pin its VALUE contract under

@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from aws_kinesis_data_ingestion_restapi_spark.schema import TABLE_PARTITIONS
@@ -120,7 +121,7 @@ def create_external_tables(
         if TABLE_PARTITIONS.get(name):
             try:
                 spark.sql(f"ALTER TABLE {qualified} RECOVER PARTITIONS")
-            except Exception:  # non-partitioned layout written flat
+            except AnalysisException:  # NOT_A_PARTITIONED_TABLE: written flat
                 pass
         plain = f"{database}.{name}" if database else name
         out[name] = spark.table(plain)

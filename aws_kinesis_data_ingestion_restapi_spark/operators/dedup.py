@@ -23,6 +23,8 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -30,6 +32,8 @@ from aws_kinesis_data_ingestion_restapi_spark.operators.ckpt import materialize
 from pyspark.sql.window import Window
 
 from aws_kinesis_data_ingestion_restapi_spark.operators.text import tokens_col
+
+_LOG = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -265,13 +269,6 @@ def count_join_pairs(grams: DataFrame, threshold: float) -> DataFrame:
 #: count join would detonate.
 COUNT_JOIN_BUDGET = 2000
 
-#: Audit trail of the last ``method='auto'`` decision, for bench
-#: attribution: {"method", "s1" (Σdf), "s2" (Σdf²), "ratio"}. Written
-#: on every auto-mode call; read by bench notes / tests. A module
-#: global (not df metadata) because the decision happens driver-side
-#: at plan-construction time.
-LAST_SSJOIN_REPORT: dict = {}
-
 #: At most one persisted auto-mode grams frame per session (see the
 #: unpersist note inside ngram_jaccard_pairs).
 _AUTO_GRAMS_CACHE: list = []
@@ -296,7 +293,7 @@ def ngram_jaccard_pairs(
       forms differ 10× in either direction depending on the df
       distribution. Auto mode is EAGER: it runs the stats job (and
       persists the shingle frame for reuse) at construction time, and
-      records its decision in :data:`LAST_SSJOIN_REPORT`.
+      logs its decision (method, Σdf, Σdf², ratio) at INFO.
     - ``'prefix'``: rarity-ordered prefix filtering + pair
       verification (Bayardo AllPairs + PPJoin positional prune) —
       immune to hot shingles, the 100 TB-safe form.
@@ -343,16 +340,10 @@ def ngram_jaccard_pairs(
             )
             s1, s2 = stats["s1"] or 0, stats["s2"] or 0
             method = "countjoin" if s2 <= COUNT_JOIN_BUDGET * s1 else "prefix"
-            LAST_SSJOIN_REPORT.clear()
-            LAST_SSJOIN_REPORT.update(
-                {
-                    "method": method,
-                    "s1": int(s1),
-                    "s2": int(s2),
-                    "ratio": round(s2 / s1, 1) if s1 else 0.0,
-                }
+            _LOG.info(
+                "ngram_jaccard auto-selected %s: s1=%d s2=%d ratio=%.1f",
+                method, s1, s2, s2 / s1 if s1 else 0.0,
             )
-            print(f"[ngram_jaccard] auto-selected {LAST_SSJOIN_REPORT}", flush=True)
         if method == "countjoin":
             return count_join_pairs(grams, threshold)
         # rarity-order the sets first: prefix buckets shrink from

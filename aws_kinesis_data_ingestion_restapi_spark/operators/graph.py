@@ -38,19 +38,12 @@ from aws_kinesis_data_ingestion_restapi_spark.operators.ckpt import materialize,
 _LOG = logging.getLogger(__name__)
 
 #: Convergence telemetry of the most recent :func:`connected_components`
-#: run (same pattern as dedup.LAST_SSJOIN_REPORT): ``rounds_used``,
-#: ``max_iter``, and ``relabeled`` (nodes relabeled per round, ending
-#: with the 0 that proved fixpoint). Callers surface this so a corpus
+#: run: ``rounds_used``, ``max_iter``, and ``relabeled`` (nodes
+#: relabeled per round, ending with the 0 that proved fixpoint). Callers surface this so a corpus
 #: whose diameter creeps toward ``max_iter`` is visible BEFORE a later
 #: run raises mid-pipeline — check ``rounds_used`` against ``max_iter``
 #: after clustering a new corpus shape.
 LAST_CC_REPORT: dict = {}
-
-
-#: Back-compat alias — the block-release helper moved to ckpt.release
-#: (shared with dedup/registry_ext) when the reliable-checkpoint knob
-#: landed; see operators/ckpt.py for the local-vs-reliable policy.
-_release_local_checkpoint = release
 
 
 def connected_components(
@@ -118,7 +111,7 @@ def connected_components(
         # release those blocks now, or a deep run pins up to max_iter
         # label-frame copies in executor storage until the (30-min)
         # periodic ContextCleaner catches up
-        _release_local_checkpoint(prev_ckpt)
+        release(prev_ckpt)
         prev_ckpt = updated
         changed = updated.filter(F.col("_new") < F.col("component")).count()
         relabeled.append(changed)
@@ -139,9 +132,9 @@ def connected_components(
                     "this graph's diameter is near the guard rail; raise "
                     "max_iter before the corpus grows", rounds, max_iter
                 )
-            _release_local_checkpoint(edges)
+            release(edges)
             return labels
-    _release_local_checkpoint(edges)
+    release(edges)
     raise RuntimeError(
         f"connected_components did not converge within max_iter={max_iter} "
         f"rounds (last round still relabeled {changed} nodes); labels would "
@@ -234,7 +227,7 @@ def connected_components_star(
             else nxt.exceptAll(e).limit(1).count()
         )
         edge_counts.append(n_nxt)
-        _release_local_checkpoint(e)  # the replaced round's edge set
+        release(e)  # the replaced round's edge set
         e = nxt
         if changed == 0:
             LAST_CC_REPORT.clear()

@@ -3775,7 +3775,7 @@ def _ivfpqt_quantizers(
     K pinned at TRAIN_K, the FAISS-standard fix for the measured
     n^1.5 full-corpus training cost (98 s at 32k vectors r9 → flat
     ~4.5 s sampled, recall within noise both fixtures/SFs —
-    scripts/bench_sampled_training.py, BENCH_NOTES r10)."""
+    BENCH_NOTES r10, "X113 sample-bounded quantizer training")."""
     def embs() -> DataFrame:
         e = _embs(spark, sf_dir)
         return similarity.clustered_embeddings(e) if clustered else e

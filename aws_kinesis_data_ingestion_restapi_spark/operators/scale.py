@@ -59,8 +59,8 @@ def salted_agg(
     negligible. With AQE on, non-skewed data pays almost nothing extra
     (the phase-1 partitions coalesce).
 
-    Honest measurement (scripts/skew_bench.py, 32M rows with a 50%
-    hot key → BENCH_NOTES round 5): for THESE re-aggregable functions
+    Honest measurement (32M rows with a 50% hot key, BENCH_NOTES
+    "Skew-resilience proof", round 5): for THESE re-aggregable functions
     Spark's map-side partial aggregation already collapses a hot key
     to one partial row per input partition, so hot-key skew cannot
     reach the shuffle and the salted form costs ~1.5× extra (its
@@ -119,7 +119,7 @@ def salted_join(
     stage. AQE's skew-join split covers sort-merge joins above its
     byte threshold at runtime; this is the PLAN-level form for when
     the salt must survive into downstream operators or AQE cannot see
-    the skew (measured numbers: scripts/skew_bench.py → BENCH_NOTES
+    the skew (measured numbers: BENCH_NOTES "Skew-resilience proof",
     round 5). The fact side gains ``_salt = spark_partition_id() %
     n_salts`` (deterministic per task — retries reproduce the same
     groups; same contract as ``_salted_partial``), the dim side

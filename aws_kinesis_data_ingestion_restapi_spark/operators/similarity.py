@@ -1161,8 +1161,8 @@ KM_TRAIN_ROUNDS = 3
 #: training measured n^1.5 (98 s at 32k vectors, BENCH_NOTES r9);
 #: sampled training measured FLAT (~4.5 s at 2k/8k/32k vectors) with
 #: recall within noise of full-corpus at both gate SFs (the shipped
-#: (512, 24) config — A/B table in BENCH_NOTES r10,
-#: scripts/bench_sampled_training.py).
+#: (512, 24) config — A/B table in BENCH_NOTES r10, "X113
+#: sample-bounded quantizer training").
 TRAIN_SAMPLE_N = 512
 #: Pinned coarse-quantizer K under sampled training (auto_stride's
 #: K≈√n would re-couple the broadcast size to the corpus).
@@ -1412,7 +1412,7 @@ def train_pq_codebooks(
     stride seed, with per-round lineage truncation. Returns
     (sub, cell, cv) — drop-in for the ``pq_cents`` override of
     :func:`topk_ivfpq` (the raw-code trained variant measured in
-    scripts/bench_ivfpq_training.py)."""
+    BENCH_NOTES "Round-9 trained-quantizer A/B")."""
     if centroid_stride is None:
         centroid_stride = auto_stride(embs.count())
     subs, _ = _pq_parts(embs, m, centroid_stride, id_col)
@@ -1529,8 +1529,8 @@ def topk_ivfpq_trained(
     and shipped raw codes (0.52). r9 re-measured on trained means,
     confirming the attribution: residual 0.60/0.66 at 2/3 rounds vs
     raw-code-trained 0.54/0.58, vs stride baseline 0.52 (clustered
-    fixture, sf0.01; scripts/bench_ivfpq_training.py, numbers in
-    BENCH_NOTES r9). Trained means are precisely what makes the
+    fixture, sf0.01; numbers in BENCH_NOTES "Round-9
+    trained-quantizer A/B"). Trained means are precisely what makes the
     textbook encoding win.
 
     Deterministic end to end: stride seed → exact integer mean

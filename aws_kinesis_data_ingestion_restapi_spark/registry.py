@@ -153,10 +153,7 @@ def pipeline_partition_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _session_scratch(spark, "pp_scan")
     events = analytics.build_order_events(spark, sf_dir)
     pd_df = to_purchase_details(events, with_partitions=True)
-    write_partitioned(
-        pd_df, f"{base}/purchase_details", table="purchase_details",
-        mode="overwrite",
-    )
+    write_partitioned(pd_df, f"{base}/purchase_details", table="purchase_details")
     create_external_tables(spark, base, database="pp_gate")
     t = spark.table("pp_gate.purchase_details")
     return (

@@ -6,13 +6,22 @@ on a 1000-executor cluster: AQE on (runtime coalescing + skew-join
 handling), shuffle partitions sized to the parallelism, UTC session
 timezone (so results compare bit-exact against the DuckDB oracle,
 which is UTC-naive), and Arrow enabled for the few Pandas-UDF paths.
+
+The environment sets only deployment facts: ``SPARK_GRAFT_CPUS``,
+``SPARK_MASTER`` and ``SPARK_DRIVER_MEMORY``. Tuning values are module
+constants, so every run measures the same engine.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+#: AQE's coalesce floor (``spark.sql.adaptive.coalescePartitions.
+#: minPartitionSize``); see the builder comment in :func:`get_spark`.
+AQE_MIN_PARTITION_SIZE = "64k"
 
 
 def _cpus() -> int:
@@ -51,7 +60,7 @@ def get_spark(
         # are far above either floor, so this only affects the tails.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_FLOOR", "64k"),
+            AQE_MIN_PARTITION_SIZE,
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # FAIR scheduling between pools: a single job (every batch
@@ -113,21 +122,21 @@ RUNTIME_CONFS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Keep compute-heavy, byte-small shuffle stages parallel (see the
     # builder comment in get_spark); runtime-settable, so harness
-    # sessions get it too. SPARK_GRAFT_AQE_FLOOR overrides for A/B
-    # benchmark attribution (e.g. "1m" = Spark's default).
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_FLOOR", "64k"
-    ),
+    # sessions get it too.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": AQE_MIN_PARTITION_SIZE,
 }
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Idempotently apply :data:`RUNTIME_CONFS` to an existing session."""
+    """Idempotently apply :data:`RUNTIME_CONFS` to an existing session.
+
+    A conf the session refuses to change (a static or core conf on some
+    builds) is left as it is."""
     for key, value in RUNTIME_CONFS.items():
         try:
             if spark.conf.get(key, None) != value:
                 spark.conf.set(key, value)
-        except Exception:  # pragma: no cover - non-settable conf on some builds
+        except AnalysisException:  # CANNOT_MODIFY_CONFIG
             pass
     return spark
 
@@ -145,12 +154,7 @@ def spread_scan(df):
     aggregation, JSON/base64 codec, shingling). Catalyst still pushes
     filters and column pruning THROUGH the repartition, so the
     exchange carries only the columns and rows the query needs.
-
-    ``SPARK_GRAFT_NO_SPREAD=1`` disables the exchange — an A/B switch
-    for attributing its cost in benchmarks, not a production mode.
     """
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD") == "1":
-        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, target // 4):

@@ -10,8 +10,9 @@ The serving sink is the DynamoDB analog (main.tf:347-370): an
 idempotent keyed upsert on (customer_id, order_id). Without Delta in
 this environment, the MERGE is emulated with a hash-bucketed partial
 rewrite: the store is laid out as ``bucket=K/`` Hive partitions keyed
-by ``pmod(xxhash64(keys), n_buckets)``, and an upsert rewrites ONLY the
-buckets the batch touches — untouched bucket files stay byte-identical.
+by ``pmod(xxhash64(keys), SERVING_N_BUCKETS)``, and an upsert rewrites
+ONLY the buckets the batch touches — untouched bucket files stay
+byte-identical.
 The rewrite is one keyed merge behind one shuffle on ``bucket``: stored
 and new rows meet in a last-write-wins window per key. Rewrite cost
 scales with the batch's key spread, not the store size (the parquet
@@ -33,14 +34,11 @@ from aws_kinesis_data_ingestion_restapi_spark.schema import TABLE_PARTITIONS
 
 SERVING_KEYS = ["customer_id", "order_id"]
 
-
-#: Columnar formats write_partitioned accepts — both built into Spark
-#: (no external jars), both footer-statistics formats so the pruning
-#: story (min/max row-group skipping, partition directories) is
-#: identical. Parquet is the default and the reference's format
-#: (Firehose parquet conversion, main.tf:654-719); ORC is the drop-in
-#: alternative for Hive-ecosystem consumers.
-COLUMNAR_FORMATS = ("parquet", "orc")
+#: ``maxRecordsPerFile`` of every table write: bounds file sizes like
+#: the Firehose 128 MB buffer (main.tf:668) bounds flush sizes — at
+#: 100 TB you want many right-sized files per partition, not one giant
+#: or thousands tiny.
+MAX_RECORDS_PER_FILE = 1_000_000
 
 
 def write_partitioned(
@@ -48,16 +46,13 @@ def write_partitioned(
     path: str,
     table: str | None = None,
     partition_cols: list[str] | None = None,
-    mode: str = "append",
-    max_records_per_file: int = 1_000_000,
-    format: str = "parquet",
 ) -> None:
-    """K1+K2: partitioned Snappy columnar write (parquet by default,
-    ORC via ``format="orc"`` — same layout, same pruning semantics).
-
-    ``maxRecordsPerFile`` bounds file sizes like the Firehose 128 MB
-    buffer (main.tf:668) bounds flush sizes — at 100 TB you want many
-    right-sized files per partition, not one giant or thousands tiny.
+    """K1+K2: partitioned Snappy parquet write, the reference's format
+    (Firehose parquet conversion, main.tf:654-719), in OVERWRITE mode:
+    ``path`` is the write's own directory, so rewriting it is
+    idempotent. ``partition_cols`` defaults to the layout of ``table``
+    (:data:`~aws_kinesis_data_ingestion_restapi_spark.schema.TABLE_PARTITIONS`);
+    ``[]`` writes flat.
 
     A partitioned write goes through one REBALANCE exchange on the
     partition columns, so each partition value lands in one task and
@@ -67,47 +62,41 @@ def write_partitioned(
     files across the four tables instead of ~40. Spark drops the hint
     when AQE is off, so results never depend on it.
     """
-    if format not in COLUMNAR_FORMATS:
-        raise ValueError(
-            f"format={format!r} not supported; choose from {COLUMNAR_FORMATS}"
-        )
     if partition_cols is None and table is not None:
         partition_cols = TABLE_PARTITIONS.get(table, [])
     if partition_cols:
         df = df.hint("rebalance", *partition_cols)
-    writer = df.write.mode(mode).option("maxRecordsPerFile", max_records_per_file)
+    writer = df.write.mode("overwrite").option(
+        "maxRecordsPerFile", MAX_RECORDS_PER_FILE
+    )
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    if format == "orc":
-        writer.option("compression", "snappy").orc(path)
-    else:
-        writer.parquet(path)
+    writer.parquet(path)
 
 
-def write_errors(
-    bad: DataFrame, base_path: str, batch_id: int | None = None
-) -> None:
+def write_errors(bad: DataFrame, base_path: str, batch_id: int) -> None:
     """E1: quarantine failed records under ``errors/`` (main.tf:676).
 
-    With ``batch_id`` the quarantine lands in a deterministic
-    ``bid={batch_id}`` partition dir in OVERWRITE mode — a replayed
-    micro-batch rewrites the same directory instead of appending
-    duplicates (the same exactly-once recipe as the table sinks;
-    streaming/pipeline.py). Without it (batch callers), plain append."""
-    if batch_id is None:
-        bad.write.mode("append").parquet(os.path.join(base_path, "errors"))
-    else:
-        bad.write.mode("overwrite").parquet(
-            os.path.join(base_path, "errors", f"bid={batch_id}")
-        )
+    The quarantine lands in a deterministic ``bid={batch_id}``
+    partition dir in OVERWRITE mode — a replayed micro-batch rewrites
+    the same directory instead of appending duplicates (the same
+    exactly-once recipe as the table sinks; streaming/pipeline.py)."""
+    bad.write.mode("overwrite").parquet(
+        os.path.join(base_path, "errors", f"bid={batch_id}")
+    )
 
 
+#: Bucket count of every serving store. It is part of the store's
+#: layout: an upsert reads only the buckets its batch hashes to, so a
+#: store written with another count would keep stale rows of keys that
+#: sit in their old bucket. Changing it needs a full rewrite of every
+#: store, which nothing here does.
 SERVING_N_BUCKETS = 16
 
 
-def _bucket_expr(n_buckets: int):
+def _bucket_expr():
     """Stable key→bucket hash (xxhash64 is version-stable and cheap)."""
-    return F.pmod(F.xxhash64(*SERVING_KEYS), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(*SERVING_KEYS), F.lit(SERVING_N_BUCKETS)).cast("int")
 
 
 def _is_bucketed_layout(store_path: str) -> bool:
@@ -118,12 +107,7 @@ def _is_bucketed_layout(store_path: str) -> bool:
     )
 
 
-def serving_upsert(
-    spark: SparkSession,
-    batch: DataFrame,
-    store_path: str,
-    n_buckets: int = SERVING_N_BUCKETS,
-) -> None:
+def serving_upsert(spark: SparkSession, batch: DataFrame, store_path: str) -> None:
     """K4+E3: idempotent keyed upsert — the DynamoDB ``put_item`` analog.
 
     Semantics (lambda_kinesis_consumer:48 + at-least-once Kinesis):
@@ -132,25 +116,25 @@ def serving_upsert(
     order within one poll is arbitrary in the reference too).
 
     Scale design: the store is hash-bucketed on the key
-    (``bucket=pmod(xxhash64(keys), n_buckets)`` Hive partitions). An
-    upsert reads and rewrites ONLY the touched buckets, as one keyed
-    merge behind one shuffle (:func:`_rewrite_buckets`); untouched
-    bucket files are never opened, and the touched-bucket list
-    collected to the driver is bounded by ``n_buckets``. Each bucket
-    swap is a rename-aside (old dir renamed away, new dir renamed in,
-    aside deleted) — NOT atomic, but the unrecoverable window is two
-    pure renames and a crash never leaves the store without the
-    bucket's data on disk; cross-bucket atomicity needs a transactional
-    format (``MERGE INTO`` on Delta/Iceberg — the documented production
-    target), matching the reference's per-item (non-transactional)
-    DynamoDB batch writes.
+    (``bucket=pmod(xxhash64(keys), SERVING_N_BUCKETS)`` Hive
+    partitions). An upsert reads and rewrites ONLY the touched buckets,
+    as one keyed merge behind one shuffle (:func:`_rewrite_buckets`);
+    untouched bucket files are never opened, and the touched-bucket
+    list collected to the driver is bounded by ``SERVING_N_BUCKETS``.
+    Each bucket swap is a rename-aside (old dir renamed away, new dir
+    renamed in, aside deleted) — NOT atomic, but the unrecoverable
+    window is two pure renames and a crash never leaves the store
+    without the bucket's data on disk; cross-bucket atomicity needs a
+    transactional format (``MERGE INTO`` on Delta/Iceberg — the
+    documented production target), matching the reference's per-item
+    (non-transactional) DynamoDB batch writes.
 
-    Size ``n_buckets`` so a bucket ≈ one task's comfortable rewrite
-    unit; at a larger store, raise it (resizing = one full rewrite, the
-    same migration path as the legacy flat layout).
+    The bucket count is fixed (:data:`SERVING_N_BUCKETS`); nothing
+    re-buckets a bucketed store. A legacy FLAT store is bucketed on
+    its first upsert.
     """
     new = batch.withColumn("_del", F.lit(False))
-    _rewrite_buckets(spark, store_path, new, n_buckets)
+    _rewrite_buckets(spark, store_path, new)
 
 
 def _write_buckets(df: DataFrame, path: str) -> None:
@@ -160,9 +144,7 @@ def _write_buckets(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
-def _rewrite_buckets(
-    spark: SparkSession, store_path: str, new: DataFrame, n_buckets: int
-) -> None:
+def _rewrite_buckets(spark: SparkSession, store_path: str, new: DataFrame) -> None:
     """The keyed merge both serving writers share. ``new`` holds the
     change rows plus a boolean ``_del`` (a tombstone). Per key of a
     touched bucket one row survives, a ``new`` row over a stored one;
@@ -179,13 +161,11 @@ def _rewrite_buckets(
     hash-partitioned on ``bucket``, which also satisfies the window
     (keyed on ``bucket`` + keys) and the partitioned write."""
     _recover_debris(store_path)
-    merged = new.withColumns({"bucket": _bucket_expr(n_buckets), "_new": F.lit(1)})
+    merged = new.withColumns({"bucket": _bucket_expr(), "_new": F.lit(1)})
     target, touched = store_path, None
     if os.path.exists(store_path):
         if not _is_bucketed_layout(store_path):
-            flat = spark.read.parquet(store_path).withColumn(
-                "bucket", _bucket_expr(n_buckets)
-            )
+            flat = spark.read.parquet(store_path).withColumn("bucket", _bucket_expr())
             staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
             _write_buckets(flat.repartition("bucket"), staging)
             _replace_store(staging, store_path)
@@ -316,7 +296,6 @@ def serving_apply_changes(
     changes: DataFrame,
     new_snapshot: DataFrame,
     store_path: str,
-    n_buckets: int = SERVING_N_BUCKETS,
 ) -> None:
     """CDC APPLY: feed a keyed change feed — the exact output shape of
     ``operators/cdc.snapshot_diff`` (key columns + ``change_type`` ∈
@@ -338,4 +317,4 @@ def serving_apply_changes(
     ).withColumn("_del", F.lit(False))
     tombstones = keyed.filter(is_del).select(*SERVING_KEYS, F.lit(True).alias("_del"))
     new = ups.unionByName(tombstones, allowMissingColumns=True)
-    _rewrite_buckets(spark, store_path, new, n_buckets)
+    _rewrite_buckets(spark, store_path, new)

@@ -21,6 +21,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from aws_kinesis_data_ingestion_restapi_spark.schema import TESTDATA_TABLES
@@ -153,7 +154,7 @@ def read_parquet_tolerant(spark: SparkSession, path: str) -> DataFrame:
         df = spark.read.parquet(path)
         df.select(*ns_cols).limit(1).collect()  # 1-row probe
         return df
-    except Exception:
+    except AnalysisException:  # PARQUET_TYPE_ILLEGAL: this build rejects NANOS
         return _read_via_arrow(spark, files, ns_cols)
 
 

@@ -29,7 +29,7 @@ log = logging.getLogger(__name__)
 AUDIT_OBSERVATION = "ingest_audit"
 
 
-def with_audit_metrics(decoded: DataFrame, name: str = AUDIT_OBSERVATION) -> DataFrame:
+def with_audit_metrics(decoded: DataFrame) -> DataFrame:
     """Attach record/corrupt counters to a decoded-envelope DataFrame.
 
     Uses the same corruptness predicate as ``split_corrupt`` (missing
@@ -39,7 +39,7 @@ def with_audit_metrics(decoded: DataFrame, name: str = AUDIT_OBSERVATION) -> Dat
     """
     is_bad = F.col("order_id").isNull() | F.col("customer_id").isNull()
     return decoded.observe(
-        name,
+        AUDIT_OBSERVATION,
         F.count(F.lit(1)).alias("n_records"),
         F.coalesce(F.sum(is_bad.cast("long")), F.lit(0)).alias("n_failed"),
     )
@@ -54,8 +54,7 @@ class AuditListener(StreamingQueryListener):
     with ``removeListener`` — listeners are session-global).
     """
 
-    def __init__(self, metric_name: str = AUDIT_OBSERVATION) -> None:
-        self.metric_name = metric_name
+    def __init__(self) -> None:
         self.records: list[dict[str, Any]] = []
 
     # -- StreamingQueryListener interface ---------------------------------
@@ -65,7 +64,7 @@ class AuditListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         progress = event.progress
         observed = progress.observedMetrics or {}
-        row = observed.get(self.metric_name)
+        row = observed.get(AUDIT_OBSERVATION)
         if row is None:
             return
         entry = {"batch_id": progress.batchId, **row.asDict()}

@@ -38,7 +38,7 @@ partition columns (one file per partition value); the serving upsert
 is one keyed merge behind one hash exchange on the bucket (one file
 per touched bucket, five Spark jobs into an existing store). The only
 data collected to the driver is the touched-bucket list (at most
-``n_buckets`` ints).
+``sinks.SERVING_N_BUCKETS`` ints).
 """
 
 from __future__ import annotations
@@ -157,7 +157,6 @@ class IngestionPipeline:
                     # partition layout only exists when the derived
                     # partition columns were materialized
                     partition_cols=None if self.with_partitions else [],
-                    mode="overwrite",
                 )
             if self.serving_path is not None:
                 sinks["serving"] = functools.partial(
@@ -209,7 +208,6 @@ class IngestionPipeline:
         decoded_stream: DataFrame,
         checkpoint: str,
         trigger: dict | None = None,
-        audit: bool = True,
     ) -> StreamingQuery:
         """Attach the pipeline to a decoded-envelope streaming DataFrame.
 
@@ -218,14 +216,13 @@ class IngestionPipeline:
         batching knobs (main.tf:275-276); ``{"availableNow": True}``
         drains the backlog and stops (used by tests/backfills).
 
-        ``audit=True`` (default) attaches the T11 per-batch record
-        counters via ``observe()`` — free (no extra pass); read them
-        with an ``observability.AuditListener``.
+        The T11 per-batch record counters are always attached via
+        ``observe()`` — free (no extra pass); read them with an
+        ``observability.AuditListener``.
         """
-        if audit:
-            decoded_stream = with_audit_metrics(decoded_stream)
         writer = (
-            decoded_stream.writeStream.foreachBatch(self.process_batch)
+            with_audit_metrics(decoded_stream)
+            .writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", checkpoint)
             .outputMode("update")
         )

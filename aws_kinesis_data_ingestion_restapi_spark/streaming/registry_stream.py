@@ -52,12 +52,6 @@ from aws_kinesis_data_ingestion_restapi_spark.streaming.stateful import (
 
 _seq = itertools.count()
 
-#: Measurement hook: when a probe sets this to a list, _drain appends
-#: (qname, recentProgress dicts) after each drain terminates — the
-#: commitTimeMs / stateOnCurrentVersionSizeBytes decomposition the
-#: optimization rounds use for attribution. Never set in query paths.
-_PROGRESS_SINK: list | None = None
-
 #: (applicationId, sf_dir) -> (orders_dir, payments_dir): the dual
 #: payment-join NDJSON feed, generated once and shared by the inner
 #: and leftOuter gates (checkpoints stay per-drain; see
@@ -98,10 +92,10 @@ def _scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
-#: Target FEED bytes per streaming state partition (overridable for
-#: A/B attribution). The state-partition count of a stateful streaming
-#: query is frozen into its checkpoint at start() from
-#: spark.sql.shuffle.partitions; every HDFS-backed state store instance
+#: Target FEED bytes per streaming state partition: 4 MiB, a constant.
+#: The state-partition count of a stateful streaming query is frozen
+#: into its checkpoint at start() from spark.sql.shuffle.partitions;
+#: every HDFS-backed state store instance
 #: then commits one delta file per micro-batch PLUS pays provider
 #: init/maintenance — a per-partition FLOOR that is pure overhead when
 #: the state is tiny. Sizing the count to the DATA (feed bytes /
@@ -111,12 +105,9 @@ def _scratch_dir(prefix: str) -> str:
 #: feed (measured commitTimeMs sums in OPTIMIZATION_r13.md), and the
 #: driver's own 8-core run (8 state partitions) beat the 32-core run
 #: 3-5 s vs 12-17 s per drain. At production volumes the byte-derived
-#: count hits the session-default cap and the setting is a no-op —
-#: scale-adaptive, not a local[32] constant (brief rule: no
-#: core-count-tuned config wins).
-_STATE_PART_TARGET = int(
-    os.environ.get("SPARK_GRAFT_STATE_PART_BYTES", str(4 * 1024 * 1024))
-)
+#: count hits the session-default cap and the target is a no-op —
+#: scale-adaptive, not a core-count-tuned value.
+_STATE_PART_TARGET = 4 * 1024 * 1024
 
 
 def _state_partitions(spark: SparkSession, feed_dirs) -> int:
@@ -259,8 +250,6 @@ def _drain(
                 f"streaming drain {qname} did not finish within 600s; "
                 "refusing to return a partially-filled memory table"
             )
-        if _PROGRESS_SINK is not None:
-            _PROGRESS_SINK.append((qname, list(q.recentProgress)))
     finally:
         # The memory sink holds the drained rows; the checkpoint is
         # dead weight once the availableNow query terminates.
@@ -1575,6 +1564,9 @@ def _intake_verdicts(spark: SparkSession, sf_dir: str, gate: str) -> DataFrame:
                 )
     except BaseException:
         for q in queries:
+            # best effort: a query that fails to stop must neither stop
+            # the others from being stopped nor replace the error being
+            # re-raised
             try:
                 q.stop()
             except Exception:

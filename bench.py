@@ -944,7 +944,7 @@ def main() -> None:
         for name, df in tables.items():
             cols = [] if name == "orders" else None  # None -> table default
             write_partitioned(df, f"{warehouse}/{name}", table=name,
-                              partition_cols=cols, mode="overwrite")
+                              partition_cols=cols)
         timings["etl_derive_tables"] = round(time.perf_counter() - t0, 3)
 
         # --- Athena-path: the 5 reference queries over materialized tables ---

@@ -62,7 +62,7 @@ assert bad.filter(bad.result == "ProcessingFailed").count() == nb
 
 tables = derive_all_tables(good, with_partitions=True)
 for name, df in tables.items():
-    write_partitioned(df, os.path.join(out, name), table=name, mode="overwrite")
+    write_partitioned(df, os.path.join(out, name), table=name)
 register_derived_tables(spark, out)
 
 res = {name: spark.sql(sql).collect() for name, sql in REFERENCE_SQL.items()}
@@ -92,9 +92,9 @@ print("duckdb cross-check: total_sales_per_country OK over", len(oc), "countries
 store = os.path.join(base, "store")
 shutil.rmtree(store, ignore_errors=True)
 odf = tables["orders"]
-serving_upsert(spark, odf, store, n_buckets=4)
+serving_upsert(spark, odf, store)
 c1 = spark.read.parquet(store).count()
-serving_upsert(spark, odf, store, n_buckets=4)
+serving_upsert(spark, odf, store)
 c2 = spark.read.parquet(store).count()
 assert c1 == c2 == ng, (c1, c2, ng)
 print("serving replay idempotent:", c1)

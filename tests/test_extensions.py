@@ -1546,7 +1546,7 @@ def test_ivfpq_trained_recall_beats_stride_on_clustered(spark):
     fixture the trained-quantizer residual IVFADC must strictly beat
     the stride-quantizer raw-code IVF-PQ at identical search
     parameters (measured at sf0.001: 0.56 vs 0.22; at sf0.01:
-    0.66 vs 0.52 — scripts/bench_ivfpq_training.py)."""
+    0.66 vs 0.52 — BENCH_NOTES "Round-9 trained-quantizer A/B")."""
     from aws_kinesis_data_ingestion_restapi_spark.operators import similarity
 
     embs = similarity.clustered_embeddings(

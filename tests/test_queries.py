@@ -83,7 +83,7 @@ def test_full_pipeline_write_catalog_sql(spark, events_df, events_raw, tmp_path)
     base = str(tmp_path / "warehouse")
     tables = derive_all_tables(events_df, with_partitions=True)
     for name, df in tables.items():
-        write_partitioned(df, f"{base}/{name}", table=name, mode="overwrite")
+        write_partitioned(df, f"{base}/{name}", table=name)
     registered = register_derived_tables(spark, base)
     assert set(registered) == {"orders", "product_details",
                                "shipping_addresses", "purchase_details"}
@@ -128,7 +128,7 @@ def test_reference_sql_files_run_verbatim(spark, events_df, events_raw, tmp_path
     base = str(tmp_path / "wh_ddl")
     tables = derive_all_tables(events_df, with_partitions=True)
     for name, df in tables.items():
-        write_partitioned(df, f"{base}/{name}", table=name, mode="overwrite")
+        write_partitioned(df, f"{base}/{name}", table=name)
     # temp views shadow catalog tables; drop any left by other tests
     for name in tables:
         spark.catalog.dropTempView(name)

@@ -94,7 +94,7 @@ def test_salted_agg_rejects_non_reaggregable(skewed):
 def test_salted_join_matches_plain_join(spark, skewed):
     """salted_join must produce exactly the plain join's rows — the
     salt changes only the shuffle shape (2.9× on a 50%-hot-key join,
-    scripts/skew_bench.py → BENCH_NOTES r5)."""
+    BENCH_NOTES "Skew-resilience proof", r5)."""
     from aws_kinesis_data_ingestion_restapi_spark.operators.scale import (
         salted_join,
     )

@@ -16,11 +16,10 @@ from pyspark.sql import functions as F
 
 from aws_kinesis_data_ingestion_restapi_spark.sinks import (
     SERVING_KEYS,
+    SERVING_N_BUCKETS,
     _bucket_expr,
     serving_upsert,
 )
-
-N_BUCKETS = 8
 
 
 def _rows(spark, keys, status):
@@ -41,7 +40,7 @@ def _file_hashes(store):
 def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     store = str(tmp_path / "serving")
     keys = [(f"c{i}", f"o{i}") for i in range(200)]
-    serving_upsert(spark, _rows(spark, keys, "pending"), store, n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, keys, "pending"), store)
 
     before = _file_hashes(store)
     buckets_present = {p.split(os.sep)[0] for p in before}
@@ -49,9 +48,9 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
 
     # upsert a single key → exactly one touched bucket
     target = keys[7]
-    serving_upsert(spark, _rows(spark, [target], "shipped"), store, n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, [target], "shipped"), store)
     touched = _rows(spark, [target], "x").select(
-        _bucket_expr(N_BUCKETS).alias("b")
+        _bucket_expr().alias("b")
     ).first()["b"]
 
     after = _file_hashes(store)
@@ -84,8 +83,8 @@ def test_upsert_replay_is_idempotent_bucketed(spark, tmp_path):
     store = str(tmp_path / "serving")
     keys = [(f"c{i}", f"o{i}") for i in range(50)]
     batch = _rows(spark, keys, "pending")
-    serving_upsert(spark, batch, store, n_buckets=N_BUCKETS)
-    serving_upsert(spark, batch, store, n_buckets=N_BUCKETS)  # full replay
+    serving_upsert(spark, batch, store)
+    serving_upsert(spark, batch, store)  # full replay
     serving = spark.read.parquet(store)
     assert serving.count() == len(keys)
     assert serving.dropDuplicates(SERVING_KEYS).count() == len(keys)
@@ -97,12 +96,12 @@ def test_upsert_collapses_batch_internal_duplicates(spark, tmp_path):
     batch row."""
     store = str(tmp_path / "serving")
     keys = [(f"c{i}", f"o{i}") for i in range(50)]
-    serving_upsert(spark, _rows(spark, keys, "pending"), store, n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, keys, "pending"), store)
     batch = spark.createDataFrame(
         [("c1", "o1", "packed"), ("c1", "o1", "shipped"), ("c2", "o2", "shipped")],
         "customer_id string, order_id string, status string",
     )
-    serving_upsert(spark, batch, store, n_buckets=N_BUCKETS)
+    serving_upsert(spark, batch, store)
     got = {
         (r["customer_id"], r["order_id"]): r["status"]
         for r in spark.read.parquet(store).collect()
@@ -119,14 +118,12 @@ def test_upsert_into_existing_store_runs_at_most_five_jobs(spark, tmp_path):
     stage is its own job, so 2 + 1 + 2."""
     store = str(tmp_path / "serving")
     keys = [(f"c{i}", f"o{i}") for i in range(200)]
-    serving_upsert(spark, _rows(spark, keys, "pending"), store, n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, keys, "pending"), store)
     sc = spark.sparkContext
     group = f"upsert-{tmp_path.name}"
     sc.setJobGroup(group, "serving upsert job count")
     try:
-        serving_upsert(
-            spark, _rows(spark, keys[:100], "shipped"), store, n_buckets=N_BUCKETS
-        )
+        serving_upsert(spark, _rows(spark, keys[:100], "shipped"), store)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -146,9 +143,9 @@ def test_upsert_writes_one_file_per_bucket_without_aqe(spark, tmp_path):
         for lo, status in ((0, "pending"), (100, "shipped")):
             batch = _rows(spark, keys[lo:], status).repartition(3)
             assert batch.rdd.getNumPartitions() > 1
-            serving_upsert(spark, batch, store, n_buckets=N_BUCKETS)
+            serving_upsert(spark, batch, store)
             dirs = glob.glob(os.path.join(store, "bucket=*"))
-            assert len(dirs) == N_BUCKETS
+            assert len(dirs) == SERVING_N_BUCKETS
             for d in dirs:
                 assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
     finally:
@@ -163,8 +160,7 @@ def test_upsert_migrates_legacy_flat_store(spark, tmp_path):
     legacy = _rows(spark, [(f"c{i}", f"o{i}") for i in range(20)], "pending")
     legacy.write.parquet(store)  # flat layout, no bucket dirs
 
-    serving_upsert(spark, _rows(spark, [("c0", "o0")], "shipped"), store,
-                   n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, [("c0", "o0")], "shipped"), store)
     serving = spark.read.parquet(store)
     assert serving.count() == 20
     assert "bucket" in serving.columns
@@ -196,11 +192,11 @@ def test_apply_changes_roundtrips_snapshot_diff(spark, tmp_path):
         ]
         + [(f"c{i}", f"o{i}", 99.0) for i in (100, 101, 102)],
     )
-    serving_upsert(spark, v1, store, n_buckets=N_BUCKETS)
+    serving_upsert(spark, v1, store)
     changes = snapshot_diff(
         v1, v2, keys=SERVING_KEYS, compare_cols=["amount"]
     )
-    serving_apply_changes(spark, changes, v2, store, n_buckets=N_BUCKETS)
+    serving_apply_changes(spark, changes, v2, store)
 
     def contents():
         return sorted(
@@ -211,7 +207,7 @@ def test_apply_changes_roundtrips_snapshot_diff(spark, tmp_path):
     want = sorted(tuple(r) for r in v2.collect())
     assert contents() == want
     # replay: same feed, same snapshot → byte-equal result set
-    serving_apply_changes(spark, changes, v2, store, n_buckets=N_BUCKETS)
+    serving_apply_changes(spark, changes, v2, store)
     assert contents() == want
 
 
@@ -226,14 +222,14 @@ def test_apply_changes_restores_bucket_lost_mid_swap(spark, tmp_path):
 
     store = str(tmp_path / "store_crash")
     v1 = _snap(spark, [(f"c{i}", f"o{i}", 1.0 * i) for i in range(40)])
-    serving_upsert(spark, v1, store, n_buckets=N_BUCKETS)
+    serving_upsert(spark, v1, store)
     # v2 updates exactly one key; find that key's bucket and crash it
     v2 = _snap(
         spark,
         [(f"c{i}", f"o{i}", 1.0 * i if i != 3 else 999.0) for i in range(40)],
     )
     b = _rows(spark, [("c3", "o3")], "x").select(
-        _bucket_expr(N_BUCKETS).alias("b")
+        _bucket_expr().alias("b")
     ).first()["b"]
     os.replace(
         os.path.join(store, f"bucket={b}"),
@@ -241,7 +237,7 @@ def test_apply_changes_restores_bucket_lost_mid_swap(spark, tmp_path):
     )
 
     changes = snapshot_diff(v1, v2, keys=SERVING_KEYS, compare_cols=["amount"])
-    serving_apply_changes(spark, changes, v2, store, n_buckets=N_BUCKETS)
+    serving_apply_changes(spark, changes, v2, store)
     got = sorted(
         (r["customer_id"], r["order_id"], r["amount"])
         for r in spark.read.parquet(store).collect()
@@ -267,7 +263,7 @@ def test_apply_changes_migrates_flat_store_first(spark, tmp_path):
         [(f"c{i}", f"o{i}", 1.0 * i if i != 2 else 77.0) for i in range(20)],
     )
     changes = snapshot_diff(v1, v2, keys=SERVING_KEYS, compare_cols=["amount"])
-    serving_apply_changes(spark, changes, v2, store, n_buckets=N_BUCKETS)
+    serving_apply_changes(spark, changes, v2, store)
     out = spark.read.parquet(store)
     assert "bucket" in out.columns, "store must come out bucketed"
     got = sorted(
@@ -282,16 +278,12 @@ def test_upsert_reclaims_crashed_staging_litter(spark, tmp_path):
     references — entry recovery must reclaim it or every crash leaks
     a store-sized directory."""
     store = str(tmp_path / "serving_lit")
-    serving_upsert(
-        spark, _rows(spark, [("c1", "o1")], "a"), store, n_buckets=N_BUCKETS
-    )
+    serving_upsert(spark, _rows(spark, [("c1", "o1")], "a"), store)
     litter = store + "._staging_deadbeefcafe"
     os.makedirs(os.path.join(litter, "bucket=0"))
     with open(os.path.join(litter, "bucket=0", "junk"), "w") as f:
         f.write("x")
-    serving_upsert(
-        spark, _rows(spark, [("c2", "o2")], "b"), store, n_buckets=N_BUCKETS
-    )
+    serving_upsert(spark, _rows(spark, [("c2", "o2")], "b"), store)
     assert not os.path.exists(litter)
     assert spark.read.parquet(store).count() == 2
 
@@ -304,9 +296,9 @@ def test_apply_changes_drops_fully_deleted_bucket(spark, tmp_path):
     store = str(tmp_path / "store")
     v1 = _snap(spark, [(f"c{i}", f"o{i}", 1.0) for i in range(12)])
     v2 = v1.limit(0)  # delete everything
-    serving_upsert(spark, v1, store, n_buckets=N_BUCKETS)
+    serving_upsert(spark, v1, store)
     changes = snapshot_diff(v1, v2, keys=SERVING_KEYS, compare_cols=["amount"])
-    serving_apply_changes(spark, changes, v2, store, n_buckets=N_BUCKETS)
+    serving_apply_changes(spark, changes, v2, store)
     remaining = [
         e for e in os.listdir(store)
         if e.startswith("bucket=") and os.listdir(os.path.join(store, e))
@@ -323,11 +315,11 @@ def test_upsert_recovers_from_crashed_swap_debris(spark, tmp_path):
 
     store = str(tmp_path / "serving")
     keys = [(f"c{i}", f"o{i}") for i in range(50)]
-    serving_upsert(spark, _rows(spark, keys, "pending"), store, n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, keys, "pending"), store)
 
     target = keys[3]
     b = _rows(spark, [target], "x").select(
-        _bucket_expr(N_BUCKETS).alias("b")
+        _bucket_expr().alias("b")
     ).first()["b"]
     # simulate the crash window: the old bucket was renamed aside and
     # the process died before the cleanup
@@ -335,8 +327,7 @@ def test_upsert_recovers_from_crashed_swap_debris(spark, tmp_path):
     aside = os.path.join(store, f"._old_bucket={b}")
     shutil.copytree(src, aside)
 
-    serving_upsert(spark, _rows(spark, [target], "shipped"), store,
-                   n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, [target], "shipped"), store)
     assert not os.path.exists(aside), "crash debris must be cleared"
     out = spark.read.parquet(store)
     assert out.count() == 50
@@ -354,12 +345,11 @@ def test_upsert_restores_bucket_lost_mid_swap(spark, tmp_path):
     key not in the new batch is silently lost."""
     store = str(tmp_path / "serving")
     keys = [(f"c{i}", f"o{i}") for i in range(50)]
-    serving_upsert(spark, _rows(spark, keys, "pending"), store,
-                   n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, keys, "pending"), store)
 
     target = keys[3]
     b = _rows(spark, [target], "x").select(
-        _bucket_expr(N_BUCKETS).alias("b")
+        _bucket_expr().alias("b")
     ).first()["b"]
     # simulate the mid-swap crash: dst renamed away, new dir never
     # landed — the aside is the bucket's ONLY copy
@@ -367,8 +357,7 @@ def test_upsert_restores_bucket_lost_mid_swap(spark, tmp_path):
     aside = os.path.join(store, f"._old_bucket={b}")
     os.replace(src, aside)
 
-    serving_upsert(spark, _rows(spark, [target], "shipped"), store,
-                   n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, [target], "shipped"), store)
     assert not os.path.exists(aside)
     out = spark.read.parquet(store)
     assert out.count() == 50, "keys sharing the crashed bucket must survive"
@@ -390,8 +379,7 @@ def test_legacy_migration_restores_store_lost_mid_swap(spark, tmp_path):
     os.replace(store, store.rstrip("/") + "._aside_migrate")
     assert not os.path.exists(store)
 
-    serving_upsert(spark, _rows(spark, [("c1", "o1")], "new"), store,
-                   n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, [("c1", "o1")], "new"), store)
     assert not os.path.exists(store.rstrip("/") + "._aside_migrate")
     out = spark.read.parquet(store)
     assert out.count() == 30, "pre-crash rows must survive the recovery"
@@ -410,8 +398,7 @@ def test_legacy_migration_survives_stale_aside(spark, tmp_path):
     with open(os.path.join(store.rstrip("/") + "._aside_migrate", "junk"), "w") as f:
         f.write("stale")
 
-    serving_upsert(spark, _rows(spark, [("c1", "o1")], "new"), store,
-                   n_buckets=N_BUCKETS)
+    serving_upsert(spark, _rows(spark, [("c1", "o1")], "new"), store)
     assert not os.path.exists(store.rstrip("/") + "._aside_migrate")
     out = spark.read.parquet(store)
     assert out.count() == 30
@@ -434,38 +421,3 @@ def test_write_errors_batch_mode_empty_and_replay(spark, tmp_path):
     out = spark.read.parquet(os.path.join(base, "errors"))
     assert out.count() == 2
     assert sorted(r["bid"] for r in out.select("bid").collect()) == [1, 1]
-
-
-def test_write_partitioned_orc_round_trip(spark, tmp_path):
-    """format="orc" writes the same Hive layout with the same
-    values — ORC is the built-in columnar alternative for
-    Hive-ecosystem consumers; partition-directory pruning and footer
-    statistics work the same way. Bad format names fail loudly."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from aws_kinesis_data_ingestion_restapi_spark.sinks import write_partitioned
-
-    df = spark.createDataFrame(
-        [(f"o{i:05d}", ["ES", "US"][i % 2], 10.0 * i) for i in range(20)],
-        ["order_id", "country", "amount"],
-    )
-    p = str(tmp_path / "orc_out")
-    write_partitioned(
-        df, p, partition_cols=["country"], mode="overwrite", format="orc"
-    )
-    back = spark.read.orc(p)
-    assert back.count() == 20
-    assert set(back.columns) == {"order_id", "country", "amount"}
-    # partition pruning works on the ORC layout too
-    es = back.filter(F.col("country") == "ES")
-    assert es.count() == 10
-    # directory-level pruning reaches the ORC scan (inputFiles() does
-    # not reflect runtime pruning on this read path — assert the plan)
-    from aws_kinesis_data_ingestion_restapi_spark.plans import (
-        has_partition_filters,
-    )
-
-    assert has_partition_filters(es, "country")
-    with pytest.raises(ValueError, match="not supported"):
-        write_partitioned(df, p, format="avro")

@@ -1206,24 +1206,35 @@ def test_state_partitions_are_data_derived_and_capped(spark, tmp_path):
 
     # end-to-end: the derived count is what the stateful query runs
     # with, and the session conf is untouched afterwards
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    sink: list = []
-    old_sink = rs._PROGRESS_SINK
-    rs._PROGRESS_SINK = sink
-    try:
-        rs.streaming_cusum_gate(spark, "/root/testdata/sf0.001").collect()
-    finally:
-        rs._PROGRESS_SINK = old_sink
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev_conf
-    import json as _json
+    from pyspark.sql.streaming import StreamingQueryListener
 
     n_parts = set()
-    for _qn, progs in sink:
-        for p in progs:
-            if isinstance(p, str):
-                p = _json.loads(p)
-            for so in p.get("stateOperators", []):
-                n_parts.add(so.get("numShufflePartitions"))
+
+    class StateParts(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            n_parts.update(
+                so.numShufflePartitions for so in event.progress.stateOperators
+            )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
+    listener = StateParts()
+    spark.streams.addListener(listener)
+    try:
+        rs.streaming_cusum_gate(spark, "/root/testdata/sf0.001").collect()
+        # progress events reach the listener asynchronously
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev_conf
     assert n_parts, "no stateful progress captured"
     # sf0.001 events feed is far below one target chunk -> 1 partition
     assert n_parts == {1}, n_parts
