@@ -64,13 +64,12 @@ def _prepared(events: DataFrame) -> DataFrame:
     return events
 
 
-def to_orders(events: DataFrame, with_partitions: bool = False) -> DataFrame:
+def to_orders(events: DataFrame) -> DataFrame:
     """T1+T3: the ``orders`` table — 4-field projection with the
     order_date cast to DATE (orders lambda:35-40; Glue main.tf:755-774).
+    Its partition column, ``customer_id`` (main.tf:675), is already a
+    data column — no extra derivation.
     """
-    # Partition layout is customer_id= (main.tf:675) — already a data
-    # column, so `with_partitions` adds nothing here.
-    del with_partitions
     df = _prepared(events)
     return df.select(
         F.col("customer_id"),
@@ -108,7 +107,7 @@ def to_product_details(events: DataFrame, with_partitions: bool = False) -> Data
     )
 
 
-def to_shipping_addresses(events: DataFrame, with_partitions: bool = False) -> DataFrame:
+def to_shipping_addresses(events: DataFrame) -> DataFrame:
     """T6: ``shipping_addresses`` — flatten the address struct
     (shipping lambda:32-39; Glue main.tf:1168-1197). Partition col is
     ``country``, already a data column — no extra derivation.
@@ -160,12 +159,13 @@ def derive_all_tables(events: DataFrame, with_partitions: bool = False) -> dict[
     One source DataFrame reused four ways — in streaming this runs
     inside a single ``foreachBatch`` so the stream is read ONCE per
     micro-batch (vs the reference's 4 Firehoses each re-reading the
-    Kinesis stream).
+    Kinesis stream). The timestamp is parsed once here; the two tables
+    with date partitions derive their own partition columns.
     """
-    prepared = with_partition_columns(parse_event_timestamp(events))
+    prepared = parse_event_timestamp(events)
     return {
-        "orders": to_orders(prepared, with_partitions),
+        "orders": to_orders(prepared),
         "product_details": to_product_details(prepared, with_partitions),
-        "shipping_addresses": to_shipping_addresses(prepared, with_partitions),
+        "shipping_addresses": to_shipping_addresses(prepared),
         "purchase_details": to_purchase_details(prepared, with_partitions),
     }

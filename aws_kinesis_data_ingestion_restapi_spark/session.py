@@ -20,7 +20,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 #: AQE's coalesce floor (``spark.sql.adaptive.coalescePartitions.
-#: minPartitionSize``); see the builder comment in :func:`get_spark`.
+#: minPartitionSize``); see its comment in :data:`RUNTIME_CONFS`.
 AQE_MIN_PARTITION_SIZE = "64k"
 
 
@@ -29,6 +29,16 @@ def _cpus() -> int:
         return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
     except (KeyError, ValueError):
         return os.cpu_count() or 1
+
+
+def _driver_memory() -> str:
+    """Default driver heap: half the host's physical memory, capped at
+    24g. Local mode runs driver and executors in this one JVM, so an
+    undersized heap shows up as GC stalls on the string/array-heavy
+    nested-event operators, and one sized past the host gets the JVM
+    OOM-killed once a second JVM runs beside it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, phys_mb // 2)}m"
 
 
 def get_spark(
@@ -52,16 +62,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE coalesces shuffle partitions by BYTES; compute-heavy
-        # operators over byte-small data (shingle arrays, candidate
-        # pairs) get crushed onto 1-2 tasks by the 1 MB default floor.
-        # A 64 KB floor keeps those stages parallel (measured 3× on
-        # the n-gram similarity join); at production sizes partitions
-        # are far above either floor, so this only affects the tails.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            AQE_MIN_PARTITION_SIZE,
-        )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # FAIR scheduling between pools: a single job (every batch
         # query — there is only ever one pool active) schedules exactly
@@ -71,33 +71,24 @@ def get_spark(
         # stages behind each other — the difference between sum() and
         # max() wall for the multiplexed intake gates.
         .config("spark.scheduler.mode", "FAIR")
-        # Deterministic oracle comparison: DuckDB timestamps are
-        # UTC-naive; pin Spark to UTC so date/timestamp values match.
-        .config("spark.sql.session.timeZone", "UTC")
-        # Arrow for pandas_udf / mapInPandas / toPandas paths.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Snappy parquet like the reference (terraform/variables.tf:56-60).
         .config("spark.sql.parquet.compression.codec", "snappy")
         # Local mode: don't let tiny test tables trigger giant broadcasts
         # of the wrong side; 64 MB is a sane cluster-ish default too.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local mode = one JVM for driver+executors: give it real heap
-        # (the box has 128 GiB; undersized heap shows up as GC stalls
-        # on the string/array-heavy nested-event operators).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.schemaInference", "false")
-        # The driver testdata's events.ts is parquet TIMESTAMP(NANOS),
-        # which Spark's vectorized reader rejects; read as long (ns
-        # since epoch) and convert with functions.nanos_ts().
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Backstop for the reliable-checkpoint knob (operators/ckpt):
         # let the ContextCleaner delete checkpoint files of GC'd RDDs.
         # Eager deletion of superseded rounds is ckpt.release's job;
         # this catches whatever release couldn't attribute.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in {**RUNTIME_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
 
@@ -107,7 +98,8 @@ def get_spark(
 #: SparkSession (without the builder confs above), so every query entry
 #: point re-asserts these at runtime via :func:`ensure_runtime_confs`
 #: (round-1 lesson: 4 events_* queries failed with PARQUET_TYPE_ILLEGAL
-#: because nanosAsLong was builder-only).
+#: because nanosAsLong was builder-only). :func:`get_spark` applies
+#: them at build time too.
 RUNTIME_CONFS = {
     # Older events.parquet generations carried TIMESTAMP(NANOS); this
     # conf made them arrive as epoch-nanos longs. Newer Spark builds
@@ -120,9 +112,12 @@ RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     # Arrow batching for the mapInPandas operators.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Keep compute-heavy, byte-small shuffle stages parallel (see the
-    # builder comment in get_spark); runtime-settable, so harness
-    # sessions get it too.
+    # AQE coalesces shuffle partitions by BYTES; compute-heavy
+    # operators over byte-small data (shingle arrays, candidate
+    # pairs) get crushed onto 1-2 tasks by the 1 MB default floor.
+    # A 64 KB floor keeps those stages parallel (measured 3× on
+    # the n-gram similarity join); at production sizes partitions
+    # are far above either floor, so this only affects the tails.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": AQE_MIN_PARTITION_SIZE,
 }
 

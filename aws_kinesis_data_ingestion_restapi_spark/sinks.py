@@ -18,6 +18,11 @@ and new rows meet in a last-write-wins window per key. Rewrite cost
 scales with the batch's key spread, not the store size (the parquet
 analog of DynamoDB touching only the written partitions; on
 Delta/Iceberg the same logic is ``MERGE INTO``).
+
+A store has one layout, bucketed from its first write: a directory
+holding only ``bucket=K`` dirs (and hidden debris). Any other visible
+entry is refused, so a foreign parquet dir is never merged into or
+overwritten.
 """
 
 from __future__ import annotations
@@ -99,12 +104,19 @@ def _bucket_expr():
     return F.pmod(F.xxhash64(*SERVING_KEYS), F.lit(SERVING_N_BUCKETS)).cast("int")
 
 
-def _is_bucketed_layout(store_path: str) -> bool:
-    return any(
-        e.startswith("bucket=")
-        for e in os.listdir(store_path)
-        if not e.startswith(("_", "."))
-    )
+def _has_buckets(store_path: str) -> bool:
+    """The store check, one listing: True when the store holds
+    ``bucket=K`` dirs (merge into them), False when it holds no visible
+    entry (new, or emptied by deletes: write in place). Any other
+    visible entry raises, naming the path."""
+    entries = os.listdir(store_path) if os.path.exists(store_path) else []
+    visible = [e for e in entries if not e.startswith(("_", "."))]
+    foreign = sorted(e for e in visible if not e.startswith("bucket="))
+    if foreign:
+        raise ValueError(
+            f"{store_path} is not a bucketed serving store: it holds {foreign[:3]}"
+        )
+    return bool(visible)
 
 
 def serving_upsert(spark: SparkSession, batch: DataFrame, store_path: str) -> None:
@@ -130,8 +142,9 @@ def serving_upsert(spark: SparkSession, batch: DataFrame, store_path: str) -> No
     (non-transactional) DynamoDB batch writes.
 
     The bucket count is fixed (:data:`SERVING_N_BUCKETS`); nothing
-    re-buckets a bucketed store. A legacy FLAT store is bucketed on
-    its first upsert.
+    re-buckets a store. A new or emptied store is written bucketed in
+    place; a path holding anything but ``bucket=K`` dirs raises
+    ``ValueError`` and is left untouched.
     """
     new = batch.withColumn("_del", F.lit(False))
     _rewrite_buckets(spark, store_path, new)
@@ -151,9 +164,9 @@ def _rewrite_buckets(spark: SparkSession, store_path: str, new: DataFrame) -> No
     a surviving tombstone is dropped (a bucket left empty is removed).
 
     Crash recovery runs FIRST, before any read: a prior run may have
-    left the only copy of the store or of a bucket under an aside
-    name. A flat store (legacy, or just restored by the recovery) is
-    re-bucketed first, with no change fused in.
+    left the only copy of a bucket under an aside name. Then one
+    listing (:func:`_has_buckets`) picks the path: merge into the
+    stored buckets, or write a new or emptied store in place.
 
     One shuffle: the stored rows of the touched buckets (a
     partition-pruned, schema-inferred read, so a store/batch column
@@ -163,12 +176,7 @@ def _rewrite_buckets(spark: SparkSession, store_path: str, new: DataFrame) -> No
     _recover_debris(store_path)
     merged = new.withColumns({"bucket": _bucket_expr(), "_new": F.lit(1)})
     target, touched = store_path, None
-    if os.path.exists(store_path):
-        if not _is_bucketed_layout(store_path):
-            flat = spark.read.parquet(store_path).withColumn("bucket", _bucket_expr())
-            staging = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
-            _write_buckets(flat.repartition("bucket"), staging)
-            _replace_store(staging, store_path)
+    if _has_buckets(store_path):
         # inferred before the collect: its footer-read job then runs
         # while the collect still waits on the batch's first read
         stored = spark.read.parquet(store_path)
@@ -193,34 +201,20 @@ def _rewrite_buckets(spark: SparkSession, store_path: str, new: DataFrame) -> No
         _swap_buckets(target, store_path, touched)
 
 
-def _restore_or_drop_aside(aside: str, primary: str) -> None:
-    """The one recovery rule both rename-aside schemes share: an
-    aside whose primary is MISSING holds the only copy (the crash hit
-    between the two replaces) — rename it back; an aside next to an
-    intact primary is a stale copy from after the second replace —
-    delete it."""
-    if not os.path.exists(aside):
-        return
-    if os.path.exists(primary):
-        shutil.rmtree(aside)
-    else:
-        os.replace(aside, primary)
-
-
 def _recover_debris(store_path: str) -> None:
     """Entry-time crash recovery, run before ANY read of the store.
 
-    Three debris classes, in dependency order:
+    Two debris classes:
 
-    1. Legacy-migration aside (``<store>._aside_migrate``): restore
-       or drop via the shared rule — a restored store is flat and
-       re-migrates on this run.
-    2. Per-bucket asides (``._old_bucket=K`` inside the store): a
-       missing ``bucket=K`` means the aside holds that bucket's ONLY
-       rows; without the restore the partition-pruned scan sees zero
-       existing rows for K and every key not in the new batch is
-       silently lost.
-    3. Crashed staging siblings (``<store>._staging_<uuid>``): a run
+    1. Per-bucket asides (``._old_bucket=K`` inside the store, left by
+       :func:`_swap_buckets`): a missing ``bucket=K`` means the aside
+       holds that bucket's ONLY rows (the crash hit between the two
+       replaces) — rename it back; without the restore the
+       partition-pruned scan sees zero existing rows for K and every
+       key not in the new batch is silently lost. An aside next to an
+       intact ``bucket=K`` is a stale copy from after the second
+       replace — delete it.
+    2. Crashed staging siblings (``<store>._staging_<uuid>``): a run
        that died between its staging write and the swap leaves a full
        merged copy of the touched buckets under a uuid name no later
        run ever references — readers never see it (hidden), but each
@@ -228,37 +222,21 @@ def _recover_debris(store_path: str) -> None:
 
     Single-writer contract (documented on serving_upsert): no
     concurrent upsert's LIVE staging dir can be present here."""
-    _restore_or_drop_aside(
-        store_path.rstrip("/") + "._aside_migrate", store_path
-    )
     if os.path.isdir(store_path):
         for entry in os.listdir(store_path):
             if entry.startswith("._old_bucket="):
-                _restore_or_drop_aside(
-                    os.path.join(store_path, entry),
-                    os.path.join(store_path, "bucket=" + entry.split("=", 1)[1]),
-                )
+                aside = os.path.join(store_path, entry)
+                bucket = os.path.join(store_path, entry[len("._old_"):])
+                if os.path.exists(bucket):
+                    shutil.rmtree(aside)
+                else:
+                    os.replace(aside, bucket)
     parent, name = os.path.split(store_path.rstrip("/"))
     parent = parent or "."
     if os.path.isdir(parent):
         for entry in os.listdir(parent):
             if entry.startswith(name + "._staging_"):
                 shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
-
-
-def _replace_store(staging: str, store_path: str) -> None:
-    """Whole-store rename-aside swap (migration path): the old store
-    stays on disk under the aside name until the new one is in place,
-    so a crash BETWEEN the two replaces leaves the store recoverable —
-    :func:`_recover_debris` renames the aside back at the next entry.
-    The aside-exists guard is defensive only: entry recovery already
-    cleared any aside before the caller read the store."""
-    aside = store_path.rstrip("/") + "._aside_migrate"
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
-    os.replace(store_path, aside)
-    os.replace(staging, store_path)
-    shutil.rmtree(aside)
 
 
 def _swap_buckets(staging: str, store_path: str, touched: list[int]) -> None:

@@ -19,7 +19,7 @@ column.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_kinesis_data_ingestion_restapi_spark.schema import ENVELOPE_SCHEMA, ORDER_EVENT_SCHEMA
@@ -47,13 +47,19 @@ def decode_envelope(envelopes: DataFrame, data_col: str = "Data") -> DataFrame:
     ).select("event.*", "_raw")
 
 
+def is_corrupt() -> Column:
+    """The corrupt-record rule: JSON parsing failed entirely or a
+    required key field is missing (the reference's Lambdas would
+    KeyError → Firehose error prefix). The one definition, shared by
+    :func:`split_corrupt` and the audit counters."""
+    return F.col("order_id").isNull() | F.col("customer_id").isNull()
+
+
 def split_corrupt(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split decoded events into (good, corrupt) — the error-quarantine
-    contract (SURVEY §2 E1). A record is corrupt when JSON parsing
-    failed entirely or the required key fields are missing (the
-    reference's Lambdas would KeyError → Firehose error prefix).
+    """Split decoded events into (good, corrupt) by :func:`is_corrupt`
+    — the error-quarantine contract (SURVEY §2 E1).
     """
-    is_bad = F.col("order_id").isNull() | F.col("customer_id").isNull()
+    is_bad = is_corrupt()
     good = decoded.filter(~is_bad).drop("_raw")
     bad = decoded.filter(is_bad).select(
         F.col("_raw").alias("raw_payload"),
@@ -130,98 +136,5 @@ def read_kinesis_stream(
         # connector delivers raw bytes; the producer's payload is the
         # base64 text, so a plain string cast recovers the Data field
         F.col("data").cast("string").alias("Data"),
-    )
-    return decode_envelope(envelopes)
-
-
-def rate_envelope_stream(
-    spark: SparkSession, rows_per_second: int = 100
-) -> DataFrame:
-    """Decoded order-event stream driven by Spark's built-in ``rate``
-    source — a CONTINUOUS, unbounded micro-batch source, which is the
-    deployment shape the Kinesis connector has (the file source the
-    gate adapters use is bounded and mtime-ordered; ``rate`` exercises
-    the pipeline the way a real stream does: batches keep coming,
-    volume is time- not file-driven, and there is no backlog to drain).
-
-    Each ``value`` (the rate source's monotonically increasing int64)
-    becomes one deterministic synthetic order event assembled ENTIRELY
-    column-side — struct build, ``to_json``, ``base64`` — then decoded
-    by the very same :func:`decode_envelope` the production path uses,
-    so the whole envelope codec round-trips per record at stream rate
-    with zero Python in the loop. Field domains mirror the reference
-    producer's (sources/generator.py: 30 fixed customers, 5 payment
-    types, exactly 2 products per order).
-
-    Swap-in contract: the returned frame is column-compatible with
-    ``read_envelope_stream`` output — ``IngestionPipeline.start`` takes
-    either; tests/test_streaming.py drives the full 4-table fan-out
-    from it."""
-    from aws_kinesis_data_ingestion_restapi_spark.sources import generator as g
-
-    def pick(choices: list, key):
-        arr = F.array(*[F.lit(str(c)) for c in choices])
-        return F.element_at(arr, (key % len(choices)).cast("int") + 1)
-
-    v = F.col("value")
-
-    def product(k):
-        return F.struct(
-            F.concat(
-                F.lit("p"), F.lpad(((k * 7919) % 100000).cast("string"), 5, "0")
-            ).alias("product_id"),
-            pick(g.PRODUCT_NAMES, k * 13).alias("name"),
-            ((k % 5) + 1).cast("int").alias("quantity"),
-            F.struct(
-                pick(g.COLORS, k * 3).alias("color"),
-                pick(g.SIZES, k * 5).alias("size"),
-            ).alias("item_details"),
-        )
-
-    event = F.struct(
-        pick(g.CUSTOMER_POOL, v).alias("customer_id"),
-        F.concat(F.lit("o"), F.lpad((v % 100000).cast("string"), 5, "0")).alias(
-            "order_id"
-        ),
-        F.concat(
-            F.date_format(
-                F.timestamp_seconds(F.lit(1704067200) + (v % 2419200)),
-                "yyyy-MM-dd'T'HH:mm:ss",
-            ),
-            F.lit("Z"),
-        ).alias("order_date"),
-        F.lit("pending").alias("status"),
-        F.struct(
-            F.concat(
-                ((v % 9999) + 1).cast("string"),
-                F.lit(" "),
-                pick(g.PRODUCT_NAMES, v * 11).alias("_"),
-                F.lit(" "),
-                pick(g.STREET_SUFFIXES, v * 17),
-            ).alias("street"),
-            F.concat(F.lit("City"), ((v % 50) + 1).cast("string")).alias("city"),
-            pick(g.STATES, v * 19).alias("state"),
-            ((v % 90000) + 10000).cast("string").alias("zip"),
-            pick(g.COUNTRIES, v * 23).alias("country"),
-        ).alias("shipping_address"),
-        F.struct(
-            pick(g.PAYMENT_TYPES, v * 29).alias("payment_type"),
-            (((v * 37) % 9000 + 1000).cast("double") / F.lit(100.0)).alias(
-                "amount"
-            ),
-            F.lit("USD").alias("currency"),
-            ((v % 13) + 1).cast("int").alias("instalments"),
-        ).alias("purchaise_details"),
-        F.array(product(v * 2), product(v * 2 + 1)).alias("product_details"),
-    )
-    envelopes = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .select(
-            F.lit("order-events").alias("StreamName"),
-            pick(g.CUSTOMER_POOL, v).alias("PartitionKey"),
-            F.base64(F.to_json(event).cast("binary")).alias("Data"),
-        )
     )
     return decode_envelope(envelopes)

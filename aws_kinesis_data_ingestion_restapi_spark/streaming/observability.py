@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from aws_kinesis_data_ingestion_restapi_spark.sources.events import is_corrupt
+
 log = logging.getLogger(__name__)
 
 #: Name under which the audit observation appears in observedMetrics.
@@ -32,16 +34,15 @@ AUDIT_OBSERVATION = "ingest_audit"
 def with_audit_metrics(decoded: DataFrame) -> DataFrame:
     """Attach record/corrupt counters to a decoded-envelope DataFrame.
 
-    Uses the same corruptness predicate as ``split_corrupt`` (missing
-    key fields after PERMISSIVE parse), so ``n_failed`` equals the rows
-    the pipeline quarantines and ``n_records - n_failed`` equals the
-    rows that reach the warehouse tables.
+    Counts with ``split_corrupt``'s own rule (``is_corrupt``), so
+    ``n_failed`` equals the rows the pipeline quarantines and
+    ``n_records - n_failed`` equals the rows that reach the warehouse
+    tables.
     """
-    is_bad = F.col("order_id").isNull() | F.col("customer_id").isNull()
     return decoded.observe(
         AUDIT_OBSERVATION,
         F.count(F.lit(1)).alias("n_records"),
-        F.coalesce(F.sum(is_bad.cast("long")), F.lit(0)).alias("n_failed"),
+        F.coalesce(F.sum(is_corrupt().cast("long")), F.lit(0)).alias("n_failed"),
     )
 
 

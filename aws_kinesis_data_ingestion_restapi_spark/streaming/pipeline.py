@@ -30,9 +30,11 @@ upsert. The reference's own contract is weaker: at-least-once Lambda
 retries + DynamoDB ``put_item`` idempotence, with duplicate S3
 objects possible on consumer errors.
 
-Scale notes: the batch body touches the stream once (persist), all
-derivations are codegen'd column expressions, and the six sinks run
-concurrently, like the reference's consumers of one Kinesis record.
+Scale notes: the batch body touches the stream once (one persisted
+copy of the micro-batch; the good and corrupt slices are filters over
+it), all derivations are codegen'd column expressions, and the six
+sinks always run, concurrently, like the reference's consumers of one
+Kinesis record.
 Each partitioned table write adds one REBALANCE exchange on its
 partition columns (one file per partition value); the serving upsert
 is one keyed merge behind one hash exchange on the bucket (one file
@@ -83,9 +85,9 @@ class IngestionPipeline:
         Root dir for the four partitioned parquet tables (the S3 bucket
         analog).
     serving_path:
-        Keyed upsert store (the DynamoDB table analog); None disables.
+        Keyed upsert store (the DynamoDB table analog).
     errors_path:
-        Quarantine root (the Firehose ``errors/`` prefix); None disables.
+        Quarantine root (the Firehose ``errors/`` prefix).
     with_partitions:
         Materialize the reference's Hive-style partition layouts
         (orders→customer_id, product_details→year, shipping→country,
@@ -96,8 +98,8 @@ class IngestionPipeline:
         self,
         spark: SparkSession,
         warehouse: str,
-        serving_path: str | None = None,
-        errors_path: str | None = None,
+        serving_path: str,
+        errors_path: str,
         with_partitions: bool = True,
     ) -> None:
         self.spark = spark
@@ -113,16 +115,17 @@ class IngestionPipeline:
         The persist() is the Spark-native replacement for the
         reference's 5-consumer fan-out: five Firehose/Lambda consumers
         each pull the SAME Kinesis records over the network; here the
-        batch is materialized once and every sink reads it locally.
+        micro-batch slice is materialized once, and every sink reads
+        it locally through a filter (good rows or corrupt ones).
         Like those consumers, the sinks run concurrently, one thread
         each, so their per-job fixed costs (planning, task launch,
         file commit) overlap instead of adding up. Each thread inherits
         this thread's local properties (the query's job group, so
         ``query.stop()`` cancels in-flight writes) and the session's
         tags. Every sink finishes before the batch does: the first
-        failure is raised only after all of them end, and only then are
-        the persisted slices released. The audit log line gives each
-        sink's wall time.
+        failure is raised only after all of them end, and only then is
+        the persisted copy released, on every path. The audit log line
+        gives each sink's wall time.
 
         Idempotence: each table write targets the deterministic
         ``bid={batch_id}`` directory in overwrite mode. The offsets
@@ -135,17 +138,15 @@ class IngestionPipeline:
         test_pipeline_restart_replays_exactly_once.
         """
         batch.persist()
-        good = None
         try:
             good, bad = split_corrupt(batch)
-            good.persist()
             # sinks are looked up as module globals here, per batch, so
             # a wrapper bound on this module sees every call
-            sinks = {}
-            if self.errors_path is not None:
-                sinks["errors"] = functools.partial(
+            sinks = {
+                "errors": functools.partial(
                     write_errors, bad, self.errors_path, batch_id=batch_id
                 )
+            }
             for name, df in derive_all_tables(
                 good, with_partitions=self.with_partitions
             ).items():
@@ -158,13 +159,9 @@ class IngestionPipeline:
                     # partition columns were materialized
                     partition_cols=None if self.with_partitions else [],
                 )
-            if self.serving_path is not None:
-                sinks["serving"] = functools.partial(
-                    serving_upsert,
-                    self.spark,
-                    to_serving_items(good),
-                    self.serving_path,
-                )
+            sinks["serving"] = functools.partial(
+                serving_upsert, self.spark, to_serving_items(good), self.serving_path
+            )
             wall_ms = self._run_sinks(sinks)
             # T11 audit log (the lambdas' "Successfully processed N records")
             log.info(
@@ -175,9 +172,7 @@ class IngestionPipeline:
         finally:
             # unpersist on EVERY path: a sink failure followed by
             # crash-replays would otherwise leak one cached copy of
-            # the good slice per attempt
-            if good is not None:
-                good.unpersist()
+            # the batch per attempt
             batch.unpersist()
 
     def _run_sinks(self, sinks: dict) -> dict[str, float]:
@@ -236,8 +231,8 @@ def run_pipeline_once(
     input_path: str,
     warehouse: str,
     checkpoint: str,
-    serving_path: str | None = None,
-    errors_path: str | None = None,
+    serving_path: str,
+    errors_path: str,
     with_partitions: bool = True,
     timeout_s: int = 300,
 ) -> None:
@@ -271,42 +266,6 @@ def run_pipeline_once(
     finally:
         if query.isActive:
             query.stop()
-
-
-def session_order_stats(
-    decoded_stream: DataFrame,
-    gap: str = "1 minute",
-    watermark_delay: str = "2 minutes",
-) -> DataFrame:
-    """Per-customer session windows over the order stream: orders
-    closer than ``gap`` merge into one session (SURVEY §2.7 — the
-    reference has no session-window analog; this is the streaming form
-    of analytics.events_sessionization).
-
-    Streaming mode watermarks event time (required for session-state
-    eviction — without it session state grows forever); batch mode runs
-    the identical expression and is the oracle-checkable equivalent.
-    """
-    ts = event_timestamp_expr()  # the shared T2 trailing-Z contract
-    df = decoded_stream.withColumn("_event_ts", ts)
-    if df.isStreaming:
-        df = df.withWatermark("_event_ts", watermark_delay)
-    return (
-        df.groupBy("customer_id", F.session_window("_event_ts", gap).alias("s"))
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("purchaise_details.amount").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_amount"),
-        )
-        .select(
-            "customer_id",
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "n_orders",
-            "total_amount",
-        )
-    )
 
 
 def tumbling_order_stats(

@@ -11,7 +11,9 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_kinesis_data_ingestion_restapi_spark.sinks import (
@@ -153,18 +155,59 @@ def test_upsert_writes_one_file_per_bucket_without_aqe(spark, tmp_path):
     assert spark.read.parquet(store).count() == len(keys)
 
 
-def test_upsert_migrates_legacy_flat_store(spark, tmp_path):
-    """A pre-bucketing flat store is merged and migrated into the
-    bucketed layout on the first upsert; later upserts are partial."""
-    store = str(tmp_path / "serving")
-    legacy = _rows(spark, [(f"c{i}", f"o{i}") for i in range(20)], "pending")
-    legacy.write.parquet(store)  # flat layout, no bucket dirs
+def _tree_hashes(root):
+    """md5 of every file under ``root``, hidden ones included."""
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as f:
+                out[os.path.relpath(path, root)] = hashlib.md5(f.read()).hexdigest()
+    return out
 
-    serving_upsert(spark, _rows(spark, [("c0", "o0")], "shipped"), store)
-    serving = spark.read.parquet(store)
-    assert serving.count() == 20
-    assert "bucket" in serving.columns
-    assert serving.filter(F.col("status") == "shipped").count() == 1
+
+def _delete_c1(spark):
+    """A change feed that deletes key (c1, o1)."""
+    return spark.createDataFrame(
+        [("c1", "o1", "delete")],
+        "customer_id string, order_id string, change_type string",
+    )
+
+
+def test_upsert_into_emptied_store(spark, tmp_path):
+    """A store whose every key was deleted holds no visible entry; the
+    next upsert writes it in place and its row is readable."""
+    from aws_kinesis_data_ingestion_restapi_spark.sinks import serving_apply_changes
+
+    store = str(tmp_path / "serving")
+    one = _rows(spark, [("c1", "o1")], "pending")
+    serving_upsert(spark, one, store)
+    serving_apply_changes(spark, _delete_c1(spark), one.limit(0), store)
+    assert not [e for e in os.listdir(store) if not e.startswith(("_", "."))]
+
+    serving_upsert(spark, _rows(spark, [("c2", "o2")], "shipped"), store)
+    got = [
+        (r["customer_id"], r["order_id"], r["status"])
+        for r in spark.read.parquet(store).collect()
+    ]
+    assert got == [("c2", "o2", "shipped")]
+
+
+def test_upsert_refuses_a_flat_parquet_dir(spark, tmp_path):
+    """A path holding anything but ``bucket=K`` dirs is not a serving
+    store: both writers raise, naming it, and leave every file as it
+    was."""
+    from aws_kinesis_data_ingestion_restapi_spark.sinks import serving_apply_changes
+
+    store = str(tmp_path / "flat")
+    flat = _rows(spark, [(f"c{i}", f"o{i}") for i in range(20)], "pending")
+    flat.write.parquet(store)
+    before = _tree_hashes(store)
+    with pytest.raises(ValueError, match=re.escape(store)):
+        serving_upsert(spark, _rows(spark, [("c0", "o0")], "shipped"), store)
+    with pytest.raises(ValueError, match=re.escape(store)):
+        serving_apply_changes(spark, _delete_c1(spark), flat, store)
+    assert _tree_hashes(store) == before
 
 
 def _snap(spark, rows):
@@ -245,31 +288,6 @@ def test_apply_changes_restores_bucket_lost_mid_swap(spark, tmp_path):
     assert got == sorted(tuple(r) for r in v2.collect()), (
         "unchanged keys sharing the crashed bucket must survive"
     )
-
-
-def test_apply_changes_migrates_flat_store_first(spark, tmp_path):
-    """A flat (never-bucketed) store — including one just restored by
-    the migration-crash recovery — must be migrated to the bucketed
-    layout before the change feed is applied; the old code read it
-    assuming a 'bucket' column and threw."""
-    from aws_kinesis_data_ingestion_restapi_spark.operators.cdc import snapshot_diff
-    from aws_kinesis_data_ingestion_restapi_spark.sinks import serving_apply_changes
-
-    store = str(tmp_path / "store_flat")
-    v1 = _snap(spark, [(f"c{i}", f"o{i}", 1.0 * i) for i in range(20)])
-    v1.write.parquet(store)  # legacy flat layout, no bucket column
-    v2 = _snap(
-        spark,
-        [(f"c{i}", f"o{i}", 1.0 * i if i != 2 else 77.0) for i in range(20)],
-    )
-    changes = snapshot_diff(v1, v2, keys=SERVING_KEYS, compare_cols=["amount"])
-    serving_apply_changes(spark, changes, v2, store)
-    out = spark.read.parquet(store)
-    assert "bucket" in out.columns, "store must come out bucketed"
-    got = sorted(
-        (r["customer_id"], r["order_id"], r["amount"]) for r in out.collect()
-    )
-    assert got == sorted(tuple(r) for r in v2.collect())
 
 
 def test_upsert_reclaims_crashed_staging_litter(spark, tmp_path):
@@ -365,45 +383,6 @@ def test_upsert_restores_bucket_lost_mid_swap(spark, tmp_path):
         (F.col("customer_id") == target[0]) & (F.col("order_id") == target[1])
     ).collect()
     assert len(got) == 1 and got[0]["status"] == "shipped"
-
-
-def test_legacy_migration_restores_store_lost_mid_swap(spark, tmp_path):
-    """A migration crash BETWEEN its two replaces leaves NOTHING at
-    the store path and the whole flat store under ._aside_migrate.
-    The next upsert must restore it (and then re-migrate) instead of
-    bootstrapping a fresh store from the current batch."""
-    store = str(tmp_path / "serving_legacy2")
-    _rows(spark, [(f"c{i}", f"o{i}") for i in range(30)], "old").write.parquet(
-        store
-    )
-    os.replace(store, store.rstrip("/") + "._aside_migrate")
-    assert not os.path.exists(store)
-
-    serving_upsert(spark, _rows(spark, [("c1", "o1")], "new"), store)
-    assert not os.path.exists(store.rstrip("/") + "._aside_migrate")
-    out = spark.read.parquet(store)
-    assert out.count() == 30, "pre-crash rows must survive the recovery"
-    assert out.filter(F.col("order_id") == "o1").first()["status"] == "new"
-    assert "bucket" in out.columns
-
-
-def test_legacy_migration_survives_stale_aside(spark, tmp_path):
-    """The flat→bucketed migration swaps via rename-aside; a stale
-    aside sibling from an earlier crashed migration must not block the
-    next one, and every legacy row must survive the migration."""
-    store = str(tmp_path / "serving_legacy")
-    # legacy FLAT layout: plain parquet, no bucket= dirs
-    _rows(spark, [(f"c{i}", f"o{i}") for i in range(30)], "old").write.parquet(store)
-    os.makedirs(store.rstrip("/") + "._aside_migrate", exist_ok=True)
-    with open(os.path.join(store.rstrip("/") + "._aside_migrate", "junk"), "w") as f:
-        f.write("stale")
-
-    serving_upsert(spark, _rows(spark, [("c1", "o1")], "new"), store)
-    assert not os.path.exists(store.rstrip("/") + "._aside_migrate")
-    out = spark.read.parquet(store)
-    assert out.count() == 30
-    assert out.filter(F.col("order_id") == "o1").first()["status"] == "new"
-    assert "bucket" in out.columns  # migrated to the bucketed layout
 
 
 def test_write_errors_batch_mode_empty_and_replay(spark, tmp_path):

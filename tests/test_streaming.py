@@ -185,40 +185,6 @@ def test_tumbling_order_stats_streaming_matches_batch(spark, stream_dirs, tmp_pa
         assert tuple(row) in batch_rows
 
 
-def test_session_order_stats_streaming_matches_batch(spark, stream_dirs, tmp_path):
-    from aws_kinesis_data_ingestion_restapi_spark.streaming.pipeline import (
-        session_order_stats,
-    )
-    from aws_kinesis_data_ingestion_restapi_spark.sources.events import (
-        read_envelope_stream,
-    )
-
-    d = stream_dirs
-    recs = envelope_records(n=60, seed=9)
-    _write_ndjson(os.path.join(d["input"], "sess0.json"), recs)
-
-    batch = session_order_stats(read_envelope_json(spark, d["input"]))
-    batch_rows = {tuple(r) for r in batch.collect()}
-    assert batch_rows
-    # sessions actually merge some orders (gap smaller than span)
-    assert any(r[3] > 1 for r in batch_rows) or len(batch_rows) > 1
-
-    out = []
-    q = (
-        session_order_stats(read_envelope_stream(spark, d["input"]))
-        .writeStream.outputMode("append")
-        .foreachBatch(lambda df, _id: out.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # every watermark-closed streaming session equals its batch twin
-    assert out
-    for row in out:
-        assert tuple(row) in batch_rows
-
-
 def test_stream_static_enrichment_broadcast(spark, tmp_path):
     """enrich_stream joins each micro-batch against the static dim
     without shuffling the stream side; left mode keeps unmatched
@@ -519,7 +485,8 @@ def test_pipeline_writes_one_file_per_partition_value(spark, stream_dirs):
     def run():
         run_pipeline_once(
             spark, d["input"], d["warehouse"], d["checkpoint"],
-            serving_path=d["serving"], with_partitions=True,
+            serving_path=d["serving"], errors_path=d["errors"],
+            with_partitions=True,
         )
 
     def parquet_files_per_dir(root):
@@ -544,51 +511,88 @@ def test_pipeline_writes_one_file_per_partition_value(spark, stream_dirs):
     assert spark.read.parquet(d["serving"]).count() == 80
 
 
-def test_pipeline_runs_on_continuous_rate_source(spark, tmp_path):
-    """The full 4-table fan-out driven by a CONTINUOUS unbounded source
-    (Spark's rate source) — the deployment shape the Kinesis connector
-    has, vs the bounded mtime-ordered file source the gate adapters
-    use. Each rate row becomes a synthetic envelope column-side and
-    round-trips through the SAME base64+JSON codec and pipeline as
-    production. The query is stopped after real batches commit; the
-    assertion is on the tables it wrote."""
+def test_pipeline_releases_the_cached_batch_on_every_path(
+    spark, stream_dirs, monkeypatch
+):
+    """process_batch keeps ONE cached copy of the micro-batch while its
+    sinks run, and releases it whether the batch commits or a sink
+    raises: the count of persistent RDDs is back to its value before
+    each batch."""
+    from aws_kinesis_data_ingestion_restapi_spark.streaming import pipeline
+
+    d = stream_dirs
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    during = []
+    real = pipeline.write_partitioned
+
+    def spy(*args, **kwargs):
+        real(*args, **kwargs)
+        # this sink has read the cached batch, so the copy exists now
+        during.append(jsc.getPersistentRDDs().size())
+
+    monkeypatch.setattr(pipeline, "write_partitioned", spy)
+    _write_ndjson(os.path.join(d["input"], "b0.json"), envelope_records(10, seed=51))
+    _run(spark, d)
+    assert during and set(during) == {before + 1}, (before, during)
+    assert jsc.getPersistentRDDs().size() == before
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("injected serving failure")
+
+    monkeypatch.setattr(pipeline, "serving_upsert", failing)
+    during.clear()
+    _write_ndjson(os.path.join(d["input"], "b1.json"), envelope_records(10, seed=52))
+    with pytest.raises(Exception, match="injected serving failure"):
+        _run(spark, d)
+    assert during and set(during) == {before + 1}, (before, during)
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_pipeline_runs_on_continuous_rate_source(spark, stream_dirs, tmp_path):
+    """The full fan-out fed the way a real stream feeds it: envelope
+    files keep landing at a steady rate while a ``processingTime``
+    query runs, so batches keep coming and there is no backlog to
+    drain. The query is stopped mid-stream, after real batches commit;
+    the assertions are on the tables it wrote."""
     import time
 
-    from aws_kinesis_data_ingestion_restapi_spark.sources.events import (
-        rate_envelope_stream,
-    )
     from aws_kinesis_data_ingestion_restapi_spark.streaming.pipeline import (
         IngestionPipeline,
     )
 
-    wh = str(tmp_path / "wh")
-    pipeline = IngestionPipeline(spark, wh, with_partitions=False)
+    d = stream_dirs
+    staged = tmp_path / "staged"
+    staged.mkdir()
+    wh = d["warehouse"]
+    pipeline = IngestionPipeline(
+        spark, wh, serving_path=d["serving"], errors_path=d["errors"],
+        with_partitions=False,
+    )
     q = pipeline.start(
-        rate_envelope_stream(spark, rows_per_second=200),
-        checkpoint=str(tmp_path / "ckpt"),
+        read_envelope_stream(spark, d["input"]),
+        checkpoint=d["checkpoint"],
         trigger={"processingTime": "1 seconds"},
     )
     try:
         deadline = time.time() + 90
+        i = 0
         while time.time() < deadline:
-            # break on either signal: two committed batches, or rows
-            # already visible in the sink (covers a slow first trigger
-            # where lastProgress lags the actual commits)
+            # land whole files only: write aside, then rename in
+            name = f"f{i:04d}.json"
+            _write_ndjson(str(staged / name), envelope_records(20, seed=100 + i))
+            os.rename(str(staged / name), os.path.join(d["input"], name))
+            i += 1
             progress = q.lastProgress
             if progress and progress.get("batchId", 0) >= 2:
                 break
-            done = sum(
-                p.get("numInputRows", 0) for p in (q.recentProgress or [])
-            )
-            if done >= 200:
-                break
-            time.sleep(1)
+            time.sleep(0.5)
     finally:
         q.stop()
     orders = spark.read.parquet(f"{wh}/orders")
     n = orders.count()
-    assert n > 0, "no orders committed from the rate source"
-    # codec round-trip integrity on continuously generated envelopes
+    assert n > 0, "no orders committed from the feed"
+    # codec round-trip integrity on continuously landed envelopes
     row = orders.limit(1).collect()[0]
     assert row["order_id"].startswith("o") and len(row["order_id"]) == 6
     products = spark.read.parquet(f"{wh}/product_details")
