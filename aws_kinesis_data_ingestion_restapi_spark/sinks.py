@@ -59,24 +59,42 @@ def write_partitioned(
     (:data:`~aws_kinesis_data_ingestion_restapi_spark.schema.TABLE_PARTITIONS`);
     ``[]`` writes flat.
 
-    A partitioned write goes through one REBALANCE exchange on the
-    partition columns, so each partition value lands in one task and
-    one file (AQE still splits a skewed value across tasks at scale).
-    Without it every input task writes a file into every partition
-    directory it holds rows for: a 1,200-record micro-batch left ~160
-    files across the four tables instead of ~40. Spark drops the hint
-    when AQE is off, so results never depend on it.
+    A partitioned write puts each partition value in one task and one
+    file (:func:`_one_task_per_value`). Without that every input task
+    writes a file into every partition directory it holds rows for: a
+    1,200-record micro-batch left ~160 files across the four tables
+    instead of ~40.
     """
     if partition_cols is None and table is not None:
         partition_cols = TABLE_PARTITIONS.get(table, [])
     if partition_cols:
-        df = df.hint("rebalance", *partition_cols)
+        df = _one_task_per_value(df, partition_cols)
     writer = df.write.mode("overwrite").option(
         "maxRecordsPerFile", MAX_RECORDS_PER_FILE
     )
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)
+
+
+def _one_task_per_value(df: DataFrame, partition_cols: list[str]) -> DataFrame:
+    """The size rule of a partitioned write. A frame whose plan
+    estimate is at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    is written by one task (``coalesce(1)``, no shuffle): the one
+    reducer AQE would fold it into anyway, minus the shuffle-map job.
+    A bigger one goes through a REBALANCE exchange on the partition
+    columns, which AQE sizes from the data (and splits a skewed value
+    across tasks). The estimate comes from the plan (file sizes, or a
+    cached relation's size), so no job runs. Neither choice changes
+    the rows written, only the file count; Spark drops the hint when
+    AQE is off."""
+    spark = df.sparkSession
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    if int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) <= advisory:
+        return df.coalesce(1)
+    return df.hint("rebalance", *partition_cols)
 
 
 def write_errors(bad: DataFrame, base_path: str, batch_id: int) -> None:

@@ -35,10 +35,17 @@ copy of the micro-batch; the good and corrupt slices are filters over
 it), all derivations are codegen'd column expressions, and the six
 sinks always run, concurrently, like the reference's consumers of one
 Kinesis record.
-Each partitioned table write adds one REBALANCE exchange on its
-partition columns (one file per partition value); the serving upsert
-is one keyed merge behind one hash exchange on the bucket (one file
-per touched bucket, five Spark jobs into an existing store). The only
+Each partitioned table write puts one file in each partition value by
+one size rule (``sinks.write_partitioned``): a batch the plan
+estimates at most AQE's advisory partition size is written by one task
+with no exchange (one Spark job), a bigger one through a REBALANCE
+exchange on its partition columns. The serving upsert is one keyed
+merge behind one hash exchange on the bucket (one file per touched
+bucket, five Spark jobs into an existing store); the size rule is not
+applied there, as one-task coalescing of the merge measured slower
+(BENCH_NOTES). A 40-file micro-batch into an existing store runs 10
+Spark jobs in all, 11 when AQE fills the cached batch for the merge
+before a table write does. The only
 data collected to the driver is the touched-bucket list (at most
 ``sinks.SERVING_N_BUCKETS`` ints).
 """

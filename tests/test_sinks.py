@@ -400,3 +400,44 @@ def test_write_errors_batch_mode_empty_and_replay(spark, tmp_path):
     out = spark.read.parquet(os.path.join(base, "errors"))
     assert out.count() == 2
     assert sorted(r["bid"] for r in out.select("bid").collect()) == [1, 1]
+
+
+def _with_year(df):
+    return df.withColumn("year", (F.col("id") % 3).cast("string"))
+
+
+def test_small_partitioned_write_runs_without_a_shuffle(spark, tmp_path):
+    """A frame estimated at most the advisory partition size is written
+    by one task with no exchange, and still one file per partition
+    value from several input partitions."""
+    from aws_kinesis_data_ingestion_restapi_spark.sinks import (
+        _one_task_per_value,
+        write_partitioned,
+    )
+
+    df = _with_year(spark.range(0, 300, numPartitions=4))
+    shaped = _one_task_per_value(df, ["year"])
+    assert "Exchange" not in shaped._jdf.queryExecution().executedPlan().toString()
+    out = str(tmp_path / "t")
+    write_partitioned(df, out, partition_cols=["year"])
+    per_dir = {
+        d: len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(os.path.join(out, "year=*"))
+    }
+    assert len(per_dir) == 3 and set(per_dir.values()) == {1}, per_dir
+    assert spark.read.parquet(out).count() == 300
+
+
+def test_large_partitioned_write_keeps_the_rebalance(spark):
+    """Above the advisory size the write keeps its REBALANCE exchange,
+    so big batches still spread over tasks. Checked on the plan; the
+    write does not run."""
+    from aws_kinesis_data_ingestion_restapi_spark.sinks import _one_task_per_value
+
+    df = _with_year(spark.range(10**8))
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    assert df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > advisory
+    plan = _one_task_per_value(df, ["year"])._jdf.queryExecution().optimizedPlan()
+    assert "RebalancePartitions [year" in plan.toString(), plan.toString()

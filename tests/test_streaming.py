@@ -301,8 +301,10 @@ def _delete_wal_commit(checkpoint: str, batch_id: int) -> None:
     commit = os.path.join(checkpoint, "commits", str(batch_id))
     assert os.path.exists(commit), f"no commit marker for batch {batch_id}"
     os.remove(commit)
-    # the local checksum-fs keeps a .N.crc sibling; a stale one makes
-    # the re-commit rename fail as a phantom concurrent query
+    # checkpoints are the one place local writes still keep .crc
+    # siblings (they go through FileContext's checksummed LocalFs); a
+    # stale .N.crc makes the re-commit rename fail as a phantom
+    # concurrent query
     crc = os.path.join(checkpoint, "commits", f".{batch_id}.crc")
     if os.path.exists(crc):
         os.remove(crc)
@@ -509,6 +511,66 @@ def test_pipeline_writes_one_file_per_partition_value(spark, stream_dirs):
     per_bucket = parquet_files_per_dir(d["serving"])
     assert len(per_bucket) > 1 and set(per_bucket.values()) == {1}, per_bucket
     assert spark.read.parquet(d["serving"]).count() == 80
+
+
+#: Spark jobs of one 40-file micro-batch into an existing serving store:
+#: the five-job serving merge, one write job per table and one for the
+#: errors, plus one when AQE fills the cached batch for the merge's
+#: touched-bucket collect before a table write has filled it (a race:
+#: 10 or 11). A shuffle per table write adds two per table; a listing
+#: job in getBatch adds one (pinned without the race in
+#: tests/test_settings.py).
+MICRO_BATCH_JOB_BUDGET = 11
+
+
+def test_micro_batch_job_budget_and_no_checksum_files(spark, stream_dirs):
+    """A micro-batch of more files than Spark's parallel-listing
+    threshold (32) into an existing serving store stays within its job
+    budget: no shuffle for a small table write. Local writes leave no
+    ``.crc`` sidecar, and each partition directory still holds one
+    parquet file."""
+    from aws_kinesis_data_ingestion_restapi_spark.streaming import pipeline
+
+    d = stream_dirs
+    p = pipeline.IngestionPipeline(
+        spark, d["warehouse"], serving_path=d["serving"],
+        errors_path=d["errors"], with_partitions=True,
+    )
+
+    def drain():
+        q = p.start(
+            read_envelope_stream(spark, d["input"]),
+            checkpoint=d["checkpoint"], trigger={"availableNow": True},
+        )
+        try:
+            assert q.awaitTermination(300), "drain timed out"
+        finally:
+            q.stop()
+        return q
+
+    _write_ndjson(os.path.join(d["input"], "warm.json"), envelope_records(10, seed=61))
+    drain()  # the serving store now exists
+    recs = envelope_records(400, seed=62)
+    for i in range(40):
+        _write_ndjson(
+            os.path.join(d["input"], f"b{i:02d}.json"), recs[i * 10:(i + 1) * 10]
+        )
+    q = drain()
+    assert [b["numInputRows"] for b in q.recentProgress if b["numInputRows"]] == [400]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) <= MICRO_BATCH_JOB_BUDGET, sorted(jobs)
+
+    for root in (d["warehouse"], d["serving"], d["errors"]):
+        crc = [f for _, _, files in os.walk(root) for f in files if f.endswith(".crc")]
+        assert not crc, (root, crc[:5])
+    for table in ("orders", "product_details", "shipping_addresses",
+                  "purchase_details"):
+        per_dir = [
+            sum(f.endswith(".parquet") for f in files)
+            for _, _, files in os.walk(f"{d['warehouse']}/{table}")
+            if any(f.endswith(".parquet") for f in files)
+        ]
+        assert per_dir and set(per_dir) == {1}, (table, per_dir)
 
 
 def test_pipeline_releases_the_cached_batch_on_every_path(
