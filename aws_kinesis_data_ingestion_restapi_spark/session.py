@@ -7,16 +7,14 @@ handling), shuffle partitions sized to the parallelism, UTC session
 timezone (so results compare bit-exact against the DuckDB oracle,
 which is UTC-naive), and Arrow enabled for the few Pandas-UDF paths.
 
-Two settings follow from the master (:func:`is_local_master`). On a
-``local[...]`` master, file listing stays on the driver
-(:func:`master_confs`: a "parallel" listing job there runs on the same
-JVM's threads and only adds a job and one task per file, 0.5 s of
-every 40-file streaming micro-batch), and the local file system writes
-no ``.crc`` sidecar next to each file (:func:`_write_no_checksums`; S3
-and HDFS, the production targets, write none either, and streaming
-checkpoints go through ``FileContext`` and keep theirs). Any other
-master keeps Spark's defaults, where executors list S3 prefixes in
-parallel.
+On a ``local[...]`` master (:func:`is_local_master`, asked of the
+session's actual master) the local file system writes no ``.crc``
+sidecar next to each file; S3 and HDFS, the production targets, write
+none either. Streaming checkpoint logs and the RocksDB state store's
+zip metadata go through ``FileContext`` and keep theirs. Its SST files
+go through the cached ``FileSystem`` and are written without one; a
+checkpoint whose SST files have them still resumes. Any other master
+keeps Spark's default.
 
 The environment sets only deployment facts: ``SPARK_GRAFT_CPUS``,
 ``SPARK_MASTER`` and ``SPARK_DRIVER_MEMORY``. Tuning values are module
@@ -58,28 +56,6 @@ def is_local_master(master: str) -> bool:
     return master == "local" or master.startswith("local[")
 
 
-def master_confs(master: str) -> dict[str, str]:
-    """Confs that follow from where the session runs: on a local master,
-    list files on the driver; on any other, none (Spark's defaults)."""
-    if not is_local_master(master):
-        return {}
-    # above any path count: an InMemoryFileIndex never lists through a
-    # Spark job
-    return {"spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1)}
-
-
-def _write_no_checksums(spark: SparkSession) -> None:
-    """Stop the local file system writing a ``.crc`` sidecar per file.
-
-    Every task of a local master gets the one cached ``LocalFileSystem``
-    instance, so the flag holds for every write. Swapping in
-    ``RawLocalFileSystem`` through ``fs.file.impl`` instead would break
-    ``FileSystem.getLocal``, which casts to ``LocalFileSystem`` (the
-    RocksDB state store's snapshot upload calls it)."""
-    hadoop_fs = spark._jvm.org.apache.hadoop.fs.FileSystem
-    hadoop_fs.getLocal(spark._jsc.hadoopConfiguration()).setWriteChecksum(False)
-
-
 def get_spark(
     app_name: str = "aws-kinesis-data-ingestion-restapi-spark",
     shuffle_partitions: int | None = None,
@@ -92,9 +68,8 @@ def get_spark(
     enabled) to ~2-3× total executor cores.
     """
     cpus = _cpus()
-    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
         .appName(app_name)
         # AQE: runtime partition coalescing, skew-join splitting, and
         # dynamic join-strategy switching. Essential at 100 TB where
@@ -128,12 +103,17 @@ def get_spark(
         # this catches whatever release couldn't attribute.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
-    confs = {**master_confs(master), **RUNTIME_CONFS, **(extra_conf or {})}
-    for key, value in confs.items():
+    for key, value in {**RUNTIME_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
-    if is_local_master(master):
-        _write_no_checksums(spark)
+    if is_local_master(spark.sparkContext.master):
+        # Every task of a local master gets this one cached
+        # LocalFileSystem, so no write leaves a .crc sidecar. Setting
+        # fs.file.impl to RawLocalFileSystem instead breaks
+        # FileSystem.getLocal, which casts to LocalFileSystem (the
+        # RocksDB state store's snapshot upload calls it).
+        hadoop_fs = spark._jvm.org.apache.hadoop.fs.FileSystem
+        hadoop_fs.getLocal(spark._jsc.hadoopConfiguration()).setWriteChecksum(False)
     return spark
 
 

@@ -41,13 +41,10 @@ estimates at most AQE's advisory partition size is written by one task
 with no exchange (one Spark job), a bigger one through a REBALANCE
 exchange on its partition columns. The serving upsert is one keyed
 merge behind one hash exchange on the bucket (one file per touched
-bucket, five Spark jobs into an existing store); the size rule is not
-applied there, as one-task coalescing of the merge measured slower
-(BENCH_NOTES). A 40-file micro-batch into an existing store runs 10
-Spark jobs in all, 11 when AQE fills the cached batch for the merge
-before a table write does. The only
-data collected to the driver is the touched-bucket list (at most
-``sinks.SERVING_N_BUCKETS`` ints).
+bucket); the size rule is not applied there, as one-task coalescing
+of the merge measured slower (BENCH_NOTES.md, "one size rule for table
+writes"). The only data collected to the driver is the touched-bucket
+list (at most ``sinks.SERVING_N_BUCKETS`` ints).
 """
 
 from __future__ import annotations

@@ -87,29 +87,20 @@ def test_env_key_scan_sees_every_read_form():
 
 
 @pytest.mark.parametrize("master", ["local", "local[4]", "local[*]", "local[8,2]"])
-def test_local_master_lists_on_the_driver(master):
-    from aws_kinesis_data_ingestion_restapi_spark.session import (
-        is_local_master,
-        master_confs,
-    )
+def test_local_master_writes_no_checksums(master):
+    """On these masters ``get_spark`` turns off ``.crc`` sidecars."""
+    from aws_kinesis_data_ingestion_restapi_spark.session import is_local_master
 
     assert is_local_master(master)
-    assert master_confs(master) == {
-        "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
-    }
 
 
 @pytest.mark.parametrize(
     "master", ["yarn", "spark://host:7077", "k8s://https://host:443", "local-cluster[2,1,1024]"]
 )
 def test_cluster_master_keeps_spark_defaults(master):
-    from aws_kinesis_data_ingestion_restapi_spark.session import (
-        is_local_master,
-        master_confs,
-    )
+    from aws_kinesis_data_ingestion_restapi_spark.session import is_local_master
 
     assert not is_local_master(master)
-    assert master_confs(master) == {}
 
 
 def test_local_session_writes_no_checksums(spark, tmp_path):
@@ -121,27 +112,6 @@ def test_local_session_writes_no_checksums(spark, tmp_path):
     files = [f for _, _, fs in os.walk(out) for f in fs]
     assert any(f.endswith(".parquet") for f in files)
     assert not [f for f in files if f.endswith(".crc")], files
-
-
-def test_local_session_lists_many_paths_without_a_job(spark, tmp_path):
-    """A streaming micro-batch's file list is longer than Spark's
-    parallel-listing threshold (32); on a local master resolving a read
-    of 40 files lists them on the driver and runs no Spark job."""
-    paths = []
-    for i in range(40):
-        path = tmp_path / f"f{i:02d}.json"
-        path.write_text('{"a": 1}\n')
-        paths.append(str(path))
-    sc = spark.sparkContext
-    group = f"listing-{tmp_path.name}"
-    sc.setJobGroup(group, "listing job count")
-    try:
-        df = spark.read.schema("a int").json(paths)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert df.count() == 40
 
 
 def test_ensure_runtime_confs_skips_a_conf_spark_refuses(spark, monkeypatch):
