@@ -309,15 +309,14 @@ def events_daily_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_tumbling_30s(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's (configured-but-unused) 30 s tumbling window
-    (terraform/main.tf:278 — SURVEY §2 E4) realized as a windowed
-    aggregate over the event stream table. Batch form of
-    streaming.tumbling_order_stats; windows are epoch-aligned, matching
-    the oracle's floor(epoch/30) arithmetic.
-    """
+def _windowed_event_stats(
+    spark: SparkSession, sf_dir: str, duration: str, slide: str | None = None
+) -> DataFrame:
+    """Per-window (n_events, total_value, n_users) over the event
+    table's epoch-aligned ``F.window(ts, duration, slide)`` — the body
+    the tumbling and sliding entries share."""
     events = _t(spark, sf_dir, "events")
-    w = F.window(as_timestamp(events, "ts"), "30 seconds")
+    w = F.window(as_timestamp(events, "ts"), duration, slide)
     return (
         events.groupBy(w.alias("w"))
         .agg(
@@ -334,6 +333,16 @@ def events_tumbling_30s(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("window_start")
     )
+
+
+def events_tumbling_30s(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's (configured-but-unused) 30 s tumbling window
+    (terraform/main.tf:278 — SURVEY §2 E4) realized as a windowed
+    aggregate over the event stream table. Batch form of
+    streaming.tumbling_order_stats; windows are epoch-aligned, matching
+    the oracle's floor(epoch/30) arithmetic.
+    """
+    return _windowed_event_stats(spark, sf_dir, "30 seconds")
 
 
 def events_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,24 +356,7 @@ def events_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
     of sliding windows (at 100 TB choose slide accordingly; the
     streaming form takes the identical F.window plus a watermark).
     Epoch-aligned starts, matching the oracle's k∈[0,4) replay."""
-    events = _t(spark, sf_dir, "events")
-    w = F.window(as_timestamp(events, "ts"), "1 hour", "15 minutes")
-    return (
-        events.groupBy(w.alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", scale=6, alias="total_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_events",
-            "total_value",
-            "n_users",
-        )
-        .orderBy("window_start")
-    )
+    return _windowed_event_stats(spark, sf_dir, "1 hour", "15 minutes")
 
 
 def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,44 +483,38 @@ def events_sessionization(
 # ---------------------------------------------------------------------------
 
 
-def customers_with_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI join: customers having ≥1 URGENT-priority order.
-
-    Semi join never multiplies rows (a customer with 40 urgent orders
-    emits once) and Spark prunes the probe side to the join key only —
-    at 100 TB the orders side ships just o_custkey through the
-    exchange, and AQE turns it into a broadcast probe when the
-    filtered side is small.
-    """
+def _customers_by_urgent_orders(
+    spark: SparkSession, sf_dir: str, how: str
+) -> DataFrame:
+    """Customers joined ``how`` (``left_semi`` / ``left_anti``) to
+    their URGENT-priority orders. Neither join type multiplies rows (a
+    customer with 40 urgent orders emits once), and Spark prunes the
+    probe side to the join key only — at 100 TB the orders side ships
+    just o_custkey through the exchange, and AQE turns it into a
+    broadcast probe when the filtered side is small."""
     customer = _t(spark, sf_dir, "customer")
     urgent = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
     return customer.join(
-        urgent, customer.c_custkey == urgent.o_custkey, "left_semi"
+        urgent, customer.c_custkey == urgent.o_custkey, how
     ).select(
         F.col("c_custkey").alias("customer_key"),
         F.col("c_name").alias("name"),
         F.col("c_mktsegment").alias("segment"),
     )
+
+
+def customers_with_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEFT SEMI join: customers having ≥1 URGENT-priority order."""
+    return _customers_by_urgent_orders(spark, sf_dir, "left_semi")
 
 
 def customers_without_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI join: customers with NO urgent-priority order — the
     complement of :func:`customers_with_urgent_orders` (the two row
-    counts sum to |customer|, pinned in tests). Same scale shape as
-    the semi form: key-only probe, no row multiplication."""
-    customer = _t(spark, sf_dir, "customer")
-    urgent = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    return customer.join(
-        urgent, customer.c_custkey == urgent.o_custkey, "left_anti"
-    ).select(
-        F.col("c_custkey").alias("customer_key"),
-        F.col("c_name").alias("name"),
-        F.col("c_mktsegment").alias("segment"),
-    )
+    counts sum to |customer|, pinned in tests)."""
+    return _customers_by_urgent_orders(spark, sf_dir, "left_anti")
 
 
 def customer_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3201,105 +3187,7 @@ def events_user_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         as_timestamp(events, "ts").cast("date").alias("day"),
     ).agg(F.count(F.lit(1)).alias("n"))
-    return user_cusum_scores(daily)
-
-
-def user_cusum_scores(daily: DataFrame) -> DataFrame:
-    """The per-user CUSUM core behind :func:`events_user_cusum` —
-    input (user_id, day, n), output every post-baseline (user, day)
-    with (s_pos, s_neg, alarm, is_changepoint); the same closed-form
-    expressions as :func:`cusum_scores` with user-partitioned
-    windows."""
-    from pyspark.sql.window import Window
-
-    widx = Window.partitionBy("user_id").orderBy("day")
-    wall = Window.partitionBy("user_id")
-    idx = daily.withColumn("_i", F.row_number().over(widx))
-    en = idx.select(
-        "user_id",
-        "day",
-        "n",
-        "_i",
-        F.sum(
-            F.when(F.col("_i") <= CUSUM_BASELINE_DAYS, F.col("n"))
-        )
-        .over(wall)
-        .cast("long")
-        .alias("sum_b"),
-        F.count(
-            F.when(F.col("_i") <= CUSUM_BASELINE_DAYS, F.lit(1))
-        )
-        .over(wall)
-        .alias("d_b"),
-    )
-    k = F.expr(f"sum_b DIV {CUSUM_ALLOWANCE_DIV}")
-    z = en.filter(F.col("_i") > F.col("d_b")).select(
-        "user_id",
-        "day",
-        "n",
-        "sum_b",
-        (F.col("n") * F.col("d_b") - F.col("sum_b") - k).alias("zpos"),
-        (F.col("sum_b") - F.col("n") * F.col("d_b") - k).alias("zneg"),
-    )
-    wcum = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    p = z.select(
-        "user_id",
-        "day",
-        "n",
-        "sum_b",
-        F.sum("zpos").over(wcum).alias("ppos"),
-        F.sum("zneg").over(wcum).alias("pneg"),
-    )
-    s = p.select(
-        "user_id",
-        "day",
-        "n",
-        "sum_b",
-        (F.col("ppos") - F.least(F.lit(0), F.min("ppos").over(wcum)))
-        .cast("long")
-        .alias("s_pos"),
-        (F.col("pneg") - F.least(F.lit(0), F.min("pneg").over(wcum)))
-        .cast("long")
-        .alias("s_neg"),
-    )
-    a = s.select(
-        "user_id",
-        "day",
-        F.col("n").alias("n_events"),
-        "s_pos",
-        "s_neg",
-        (
-            (F.col("s_pos") > F.col("sum_b"))
-            | (F.col("s_neg") > F.col("sum_b"))
-        ).alias("alarm"),
-    )
-    wprior = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return a.select(
-        "user_id",
-        "day",
-        "n_events",
-        "s_pos",
-        "s_neg",
-        "alarm",
-        (
-            F.col("alarm")
-            & (
-                F.coalesce(
-                    F.sum(F.col("alarm").cast("int")).over(wprior),
-                    F.lit(0),
-                )
-                == 0
-            )
-        ).alias("is_changepoint"),
-    ).orderBy("user_id", "day")
+    return cusum_scores(daily, ("user_id",))
 
 
 def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3341,36 +3229,43 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cusum_scores(daily)
 
 
-def cusum_scores(daily: DataFrame) -> DataFrame:
-    """The day-table CUSUM core behind :func:`events_cusum_changepoint`
-    (factored out so the engineered level-shift fixture pins the exact
-    closed form against the brute recursion): input (day, n), output
-    (day, n_events, s_pos, s_neg, alarm, is_changepoint) for every
-    post-baseline day under the module-constant contract."""
+def cusum_scores(daily: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """The closed-form CUSUM core behind :func:`events_cusum_changepoint`
+    (no ``keys``: the day table) and :func:`events_user_cusum`
+    (``keys=("user_id",)``: one detector per user), factored out so
+    the engineered level-shift fixture pins the exact closed form
+    against the brute recursion: input (*keys, day, n), output
+    (*keys, day, n_events, s_pos, s_neg, alarm, is_changepoint) for
+    every post-baseline day under the module-constant contract. The
+    baseline totals are conditional window sums over the key
+    partition, so no key count needs a crossJoin."""
     from pyspark.sql.window import Window
 
-    widx = Window.orderBy("day")
+    wall = Window.partitionBy(*keys)
+    widx = wall.orderBy("day")
+    wcum = widx.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wprior = widx.rowsBetween(Window.unboundedPreceding, -1)
     idx = daily.withColumn("_i", F.row_number().over(widx))
-    base = idx.filter(F.col("_i") <= CUSUM_BASELINE_DAYS).agg(
-        F.sum("n").cast("long").alias("sum_b"),
-        F.count(F.lit(1)).alias("d_b"),
+    baseline = F.col("_i") <= CUSUM_BASELINE_DAYS
+    en = idx.select(
+        *keys,
+        "day",
+        "n",
+        "_i",
+        F.sum(F.when(baseline, F.col("n"))).over(wall).cast("long").alias("sum_b"),
+        F.count(F.when(baseline, F.lit(1))).over(wall).alias("d_b"),
     )
     k = F.expr(f"sum_b DIV {CUSUM_ALLOWANCE_DIV}")
-    z = (
-        idx.crossJoin(F.broadcast(base))
-        .filter(F.col("_i") > F.col("d_b"))
-        .select(
-            "day",
-            "n",
-            "sum_b",
-            (F.col("n") * F.col("d_b") - F.col("sum_b") - k).alias("zpos"),
-            (F.col("sum_b") - F.col("n") * F.col("d_b") - k).alias("zneg"),
-        )
-    )
-    wcum = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    z = en.filter(F.col("_i") > F.col("d_b")).select(
+        *keys,
+        "day",
+        "n",
+        "sum_b",
+        (F.col("n") * F.col("d_b") - F.col("sum_b") - k).alias("zpos"),
+        (F.col("sum_b") - F.col("n") * F.col("d_b") - k).alias("zneg"),
     )
     p = z.select(
+        *keys,
         "day",
         "n",
         "sum_b",
@@ -3378,6 +3273,7 @@ def cusum_scores(daily: DataFrame) -> DataFrame:
         F.sum("zneg").over(wcum).alias("pneg"),
     )
     s = p.select(
+        *keys,
         "day",
         "n",
         "sum_b",
@@ -3389,6 +3285,7 @@ def cusum_scores(daily: DataFrame) -> DataFrame:
         .alias("s_neg"),
     )
     a = s.select(
+        *keys,
         "day",
         F.col("n").alias("n_events"),
         "s_pos",
@@ -3398,10 +3295,8 @@ def cusum_scores(daily: DataFrame) -> DataFrame:
             | (F.col("s_neg") > F.col("sum_b"))
         ).alias("alarm"),
     )
-    wprior = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
     return a.select(
+        *keys,
         "day",
         "n_events",
         "s_pos",
@@ -3417,4 +3312,4 @@ def cusum_scores(daily: DataFrame) -> DataFrame:
                 == 0
             )
         ).alias("is_changepoint"),
-    ).orderBy("day")
+    ).orderBy(*keys, "day")

@@ -278,7 +278,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 2,
     threshold: float = 0.5,
-    candidates: DataFrame | None = None,
     method: str = "auto",
 ) -> DataFrame:
     """Word n-gram Jaccard similarity pairs ≥ threshold — an EXACT
@@ -301,57 +300,53 @@ def ngram_jaccard_pairs(
       frequencies are bounded.
 
     All forms produce identical results (zero false negatives /
-    positives). Pass ``candidates`` (columns doc_a, doc_b) to verify
-    an externally blocked set instead — e.g. feed
-    ``minhash_lsh_pairs`` / ``simhash_near_pairs`` output through the
-    same exact-Jaccard verifier.
+    positives).
     """
     grams = tokenized(docs).select(
         F.col("doc_id"), hashed_ngrams(n, F.col("_toks")).alias("grams")
     ).repartition(F.col("doc_id"))
-    if candidates is None:
-        if method == "auto":
-            # NOTE: auto mode runs one EAGER Spark job here (the Σdf /
-            # Σdf² stats aggregate) at DataFrame-construction time —
-            # the price of a measured, not guessed, plan choice. The
-            # grams frame is persisted first so the tokenize+shingle
-            # work is paid once and reused by the join below instead
-            # of recomputed from the parquet scan. The PREVIOUS auto
-            # call's frame is unpersisted here: no caller ever gets a
-            # handle to do it, so without this a session that loops
-            # the auto path (gate runs, notebooks) pins one dead
-            # cached frame per call forever. At most ONE grams frame
-            # stays cached per session; an older returned plan simply
-            # recomputes if executed after a newer auto call.
-            grams = grams.persist()
-            for prev in _AUTO_GRAMS_CACHE:
-                prev.unpersist(False)
-            _AUTO_GRAMS_CACHE.clear()
-            _AUTO_GRAMS_CACHE.append(grams)
-            stats = (
-                grams.select(F.explode("grams").alias("tok"))
-                .groupBy("tok")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .agg(
-                    F.sum("df").alias("s1"),
-                    F.sum(F.col("df") * F.col("df")).alias("s2"),
-                )
-                .collect()[0]
+    if method == "auto":
+        # NOTE: auto mode runs one EAGER Spark job here (the Σdf /
+        # Σdf² stats aggregate) at DataFrame-construction time —
+        # the price of a measured, not guessed, plan choice. The
+        # grams frame is persisted first so the tokenize+shingle
+        # work is paid once and reused by the join below instead
+        # of recomputed from the parquet scan. The PREVIOUS auto
+        # call's frame is unpersisted here: no caller ever gets a
+        # handle to do it, so without this a session that loops
+        # the auto path (gate runs, notebooks) pins one dead
+        # cached frame per call forever. At most ONE grams frame
+        # stays cached per session; an older returned plan simply
+        # recomputes if executed after a newer auto call.
+        grams = grams.persist()
+        for prev in _AUTO_GRAMS_CACHE:
+            prev.unpersist(False)
+        _AUTO_GRAMS_CACHE.clear()
+        _AUTO_GRAMS_CACHE.append(grams)
+        stats = (
+            grams.select(F.explode("grams").alias("tok"))
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .agg(
+                F.sum("df").alias("s1"),
+                F.sum(F.col("df") * F.col("df")).alias("s2"),
             )
-            s1, s2 = stats["s1"] or 0, stats["s2"] or 0
-            method = "countjoin" if s2 <= COUNT_JOIN_BUDGET * s1 else "prefix"
-            _LOG.info(
-                "ngram_jaccard auto-selected %s: s1=%d s2=%d ratio=%.1f",
-                method, s1, s2, s2 / s1 if s1 else 0.0,
-            )
-        if method == "countjoin":
-            return count_join_pairs(grams, threshold)
-        # rarity-order the sets first: prefix buckets shrink from
-        # hot-shingle-sized to rare-shingle-sized (exactness unchanged
-        # — any global order is valid; Jaccard verification below is
-        # order-insensitive)
-        grams = df_ordered(grams).repartition(F.col("doc_id"))
-        candidates = prefix_filter_candidates(grams, threshold)
+            .collect()[0]
+        )
+        s1, s2 = stats["s1"] or 0, stats["s2"] or 0
+        method = "countjoin" if s2 <= COUNT_JOIN_BUDGET * s1 else "prefix"
+        _LOG.info(
+            "ngram_jaccard auto-selected %s: s1=%d s2=%d ratio=%.1f",
+            method, s1, s2, s2 / s1 if s1 else 0.0,
+        )
+    if method == "countjoin":
+        return count_join_pairs(grams, threshold)
+    # rarity-order the sets first: prefix buckets shrink from
+    # hot-shingle-sized to rare-shingle-sized (exactness unchanged
+    # — any global order is valid; Jaccard verification below is
+    # order-insensitive)
+    grams = df_ordered(grams).repartition(F.col("doc_id"))
+    candidates = prefix_filter_candidates(grams, threshold)
     # the per-doc gram table is corpus-size/|docs| smaller than the
     # candidate table — broadcast both legs of the verification join
     # when small; Catalyst/AQE falls back to shuffle join beyond the
@@ -388,14 +383,6 @@ def ngram_jaccard_pairs(
 # and engine-portable. h is 28 bits (7 md5 hex chars), so A_i·h + B_i
 # stays far inside a signed 64-bit integer in every engine.
 MINHASH_MOD = 2_147_483_647  # 2^31 − 1 (Mersenne prime)
-
-
-def _perm_a(i: int) -> int:
-    return 2 * i + 1
-
-
-def _perm_b(i: int) -> int:
-    return 1_000_003 * (i + 1)
 
 
 def minhash_signatures(
@@ -573,7 +560,6 @@ def minhash_lsh_pairs(
     be :func:`minhash_candidate_pairs` output over the same
     parameters (the registry session-caches that frame so the pair
     query and the quality audit share ONE candidate computation).
-    Same passthrough contract as ``ngram_jaccard_pairs(candidates=)``.
     """
     if sigs is None:
         if docs is None:

@@ -562,27 +562,39 @@ def _band_near_dup(bands: DataFrame, d_max: int | None) -> DataFrame:
     )
 
 
-def rerendered_assets(docs: DataFrame) -> DataFrame:
+def rerendered_assets(
+    docs: DataFrame, residue: int = 0, min_len: int = 72
+) -> DataFrame:
     """Assets plus deterministic RE-RENDERS — the fixture geometry the
-    pHash near-dup needs (same precedent as similarity.
+    near-dup fingerprints need (same precedent as similarity.
     clustered_embeddings): the synthetic corpus has essentially no
-    duplicate image payloads, so the operator's gate row would be an
-    always-empty result. Every 30th document (i.e. every 10th image
-    asset) is re-rendered as asset_id + 30_000_000 (a multiple of 3, so the re-render
-    keeps kind='image' under the doc_id % 3 cycle) with ONE character
-    replaced at the text midpoint — the byte content changes (md5
-    differs, exact dedup misses it) while at most one dHash grid cell
-    is resampled, flipping ≤ 2 gradient bits, so the pair sits within
-    the d ≤ 3 emission threshold BY CONSTRUCTION — *for texts of ≥ 72
-    chars*, where the 72-cell grid samples each character at most
-    once. A shorter text's midpoint char can back several cells and
-    push hamming past d_max, silently dropping the engineered pair
-    (r8 ADVICE), so re-render candidates are length-guarded: the
-    selection keeps only docs the guarantee actually holds for (at
-    sf0.1 this excludes 3 of 167 candidates). Pure column arithmetic;
-    the DuckDB oracle re-derives the identical guarded re-render."""
+    duplicate media payloads, so each gate row would be an
+    always-empty result. Every 30th document with doc_id ≡ ``residue``
+    mod 30 (0: image, 1: audio, 2: video under the doc_id % 3 cycle)
+    is re-rendered as asset_id + 30_000_000 (a multiple of 3, so the
+    re-render keeps its kind) with ONE character replaced at the text
+    midpoint — the byte content changes (md5 differs, exact dedup
+    misses it) while the fingerprint moves by at most one cell, so
+    the pair sits within the emission threshold BY CONSTRUCTION for
+    texts of at least ``min_len`` chars:
+
+    - image (residue 0, ≥ 72): the 72-cell dHash grid samples each
+      character at most once, so ≤ 2 gradient bits flip. A shorter
+      text's midpoint char can back several cells and push hamming
+      past d_max, silently dropping the engineered pair (r8 ADVICE);
+      at sf0.1 the guard excludes 3 of 167 candidates.
+    - audio (residue 1, ≥ 1): energy windows PARTITION the payload,
+      so the ≤ 2-bit guarantee holds for every non-empty text.
+    - video (residue 2, ≥ 96): the edit lands inside exactly one
+      32-char frame, so the sequence keeps its length with at most
+      one mismatching frame hash; ≥ 3 frames leave ≥ 2 SAMPLED ones,
+      so the agreement floor is satisfiable even when the edit hits a
+      sampled frame.
+
+    Pure column arithmetic; the DuckDB oracle re-derives the identical
+    guarded re-render."""
     rr = docs.filter(
-        (F.col("doc_id") % 30 == 0) & (F.length("text") >= 72)
+        (F.col("doc_id") % 30 == residue) & (F.length("text") >= min_len)
     ).select(
         (F.col("doc_id") + 30_000_000).alias("doc_id"),
         F.expr(
@@ -673,29 +685,6 @@ def afp_near_dup(assets: DataFrame, d_max: int = PHASH_D_MAX) -> DataFrame:
     rides (:func:`_band_near_dup`); only the fingerprint extractor
     differs. Output (asset_a, asset_b, hamming)."""
     return _band_near_dup(afp_bands(assets), d_max)
-
-
-def rerendered_audio_assets(docs: DataFrame) -> DataFrame:
-    """Assets plus deterministic audio RE-RENDERS (the fixture
-    geometry afp_near_dup needs — same precedent as
-    :func:`rerendered_assets`): every 30th AUDIO document
-    (doc_id ≡ 1 mod 30 → kind='audio' under the doc_id % 3 cycle) is
-    re-encoded as asset_id + 30_000_000 (≡ 0 mod 3, kind preserved)
-    with one character replaced at the text midpoint. Unlike the
-    image grid's point samples, the energy windows PARTITION the
-    payload, so the ≤2-bit guarantee holds for every length — no
-    ≥72-char guard."""
-    rr = docs.filter(
-        (F.col("doc_id") % 30 == 1) & (F.length("text") > 0)
-    ).select(
-        (F.col("doc_id") + 30_000_000).alias("doc_id"),
-        F.expr(
-            "substring(text, 1, length(text) DIV 2) || 'z' || "
-            "substring(text, length(text) DIV 2 + 2)"
-        ).alias("text"),
-    )
-    base = docs.select("doc_id", "text")
-    return synthesize_assets(base.unionByName(rr))
 
 
 # ---------------------------------------------------------------------------
@@ -819,29 +808,3 @@ def video_near_dup(
             & (F.col("n_frames") - F.col("n_diff") >= 1)
         )
     )
-
-
-def rerendered_video_assets(docs: DataFrame) -> DataFrame:
-    """Assets plus deterministic VIDEO re-renders (the fixture
-    geometry video_near_dup needs — the X104/X142 precedent): every
-    30th VIDEO document (doc_id ≡ 2 mod 30 → kind='video' under the
-    doc_id % 3 cycle) is re-encoded as asset_id + 30_000_000 (≡ 0
-    mod 3 offset, kind preserved) with one character replaced at the
-    text midpoint. The edit lands inside exactly one 32-char
-    fingerprint frame, so the re-rendered sequence has EQUAL length
-    and at most one mismatching frame hash (zero when the edited
-    frame is unsampled or the replaced char was already 'z'). The
-    ≥96-char guard (the X104 length-guard precedent) ensures ≥ 3
-    total → ≥ 2 SAMPLED fingerprint frames, so the agreement floor
-    is satisfiable even when the edit hits a sampled frame."""
-    rr = docs.filter(
-        (F.col("doc_id") % 30 == 2) & (F.length("text") >= 96)
-    ).select(
-        (F.col("doc_id") + 30_000_000).alias("doc_id"),
-        F.expr(
-            "substring(text, 1, length(text) DIV 2) || 'z' || "
-            "substring(text, length(text) DIV 2 + 2)"
-        ).alias("text"),
-    )
-    base = docs.select("doc_id", "text")
-    return synthesize_assets(base.unionByName(rr))

@@ -1446,6 +1446,16 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lang_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(lang, gram): every word 3-gram shingle of the corpus with its
+    document's language — the input of the per-language distinct
+    sketches and of their exact-count audits."""
+    toks = _docs(spark, sf_dir).select("lang", dedup.tokens_col().alias("_toks"))
+    return toks.select(
+        "lang", F.explode(dedup.word_ngrams(3, F.col("_toks"))).alias("gram")
+    )
+
+
 def sketch_distinct_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language approximate distinct word-trigram count via the
     deterministic θ-sample sketch (operators/sketch.py): md5 hashes
@@ -1454,17 +1464,9 @@ def sketch_distinct_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/16th of the shingle stream ever shuffles — the scale story —
     while the estimate (including its sampling error) is bit-identical
     in DuckDB, so the oracle checks VALUES, not just plumbing."""
-    docs = _docs(spark, sf_dir)
-    grams = docs.select(
-        "lang", dedup.tokens_col().alias("_toks")
-    ).select(
-        "lang", F.explode(dedup.word_ngrams(3, F.col("_toks"))).alias("gram")
-    )
     return sketch.theta_distinct(
-        grams, ["lang"], "gram", theta_hex_digits=1
+        _lang_trigrams(spark, sf_dir), ["lang"], "gram", theta_hex_digits=1
     ).orderBy("lang")
-
-
 
 
 def sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1477,12 +1479,7 @@ def sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the occasional validation run, not the production path; at 100 TB
     it runs on a sampled stratum or a golden day, and the production
     dashboards keep reading the sketch."""
-    docs = _docs(spark, sf_dir)
-    grams = docs.select(
-        "lang", dedup.tokens_col().alias("_toks")
-    ).select(
-        "lang", F.explode(dedup.word_ngrams(3, F.col("_toks"))).alias("gram")
-    )
+    grams = _lang_trigrams(spark, sf_dir)
     est = sketch.theta_distinct(grams, ["lang"], "gram", theta_hex_digits=1)
     exact = grams.groupBy("lang").agg(
         F.countDistinct("gram").alias("exact_distinct")
@@ -1505,10 +1502,6 @@ def sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
-
-
 def docs_hll_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X158: MERGEABLE per-key distinct sketch + its accuracy audit
     (r10 VERDICT ask #3) — per-language HLL-shape register estimate
@@ -1525,12 +1518,7 @@ def docs_hll_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key aggregate (the production path); the exact side pays the
     full distinct shuffle deliberately — this is the validation run,
     not the dashboard query."""
-    docs = _docs(spark, sf_dir)
-    grams = docs.select(
-        "lang", dedup.tokens_col().alias("_toks")
-    ).select(
-        "lang", F.explode(dedup.word_ngrams(3, F.col("_toks"))).alias("gram")
-    )
+    grams = _lang_trigrams(spark, sf_dir)
     regs = sketch.hll_registers(grams, ["lang"], "gram")
     est = sketch.hll_estimate(regs, ["lang"])
     exact = grams.groupBy("lang").agg(
@@ -3207,49 +3195,42 @@ def _funnel_stage_ids(
     ]
 
 
-def corpus_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X162: the X148 curation funnel KEYED BY SOURCE (r10 VERDICT ask
-    #8) — the table that decides FEED drops: X131's contamination
-    matrix says which source leaks benchmark text, this says which
-    source's documents actually survive the chain (a feed whose
-    survival collapses at the near-dup or quality stage is a
-    candidate for removal at the intake, the cheapest place). Same
-    stage id-frames as X148 (:func:`_funnel_stage_ids` — shared, so
-    the two reports cannot disagree), one per-source aggregate per
-    stage, and a (source × stage) grid left-join so a source that
-    loses EVERYTHING at a stage still shows its zero row (the row a
-    feed review is looking for). pct is of that source's OWN raw
-    count. Per-source monotonicity pinned in pytest."""
+def _curation_funnel(
+    spark: SparkSession, sf_dir: str, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """The curation funnel per ``keys`` group (none: one corpus-level
+    funnel): (*keys, stage, n_docs, n_tokens, pct_docs) for every
+    :func:`_funnel_stage_ids` stage, so the corpus-level and keyed
+    reports walk LITERALLY the same stages and cannot disagree. pct
+    is of the group's OWN raw count. With keys, a (group × stage)
+    grid left-join keeps the zero row of a group that loses
+    EVERYTHING at a stage."""
+    keys = list(keys)
     docs = _docs(spark, sf_dir)
     tok = docs.select(
-        "doc_id",
-        "source",
-        F.size(text.tokens_col()).cast("long").alias("ntok"),
+        "doc_id", *keys, F.size(text.tokens_col()).cast("long").alias("ntok")
     )
     # pre-strip stages count the AS-CRAWLED template pages (the lined
     # corpus); 2b strips boilerplate (cleaned == prose tokens), and
     # every later stage counts prose — the r11 ask #5 funnel stage,
     # monotone by construction (cleaned <= lined; later ids subset)
-    ltok = _lined_tok(spark, sf_dir)
-    ctok = _clean_tok(spark, sf_dir)
-    universe = docs.select("source").distinct()
+    ltok = _lined_tok(spark, sf_dir).select("doc_id", *keys, "ntok")
+    ctok = _clean_tok(spark, sf_dir).select("doc_id", *keys, "ntok")
 
     def stage(name: str, ids: DataFrame | None, base_tok: DataFrame):
-        base = (
-            base_tok
-            if ids is None
-            else base_tok.join(ids, "doc_id")
+        base = base_tok if ids is None else base_tok.join(ids, "doc_id")
+        agg = base.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.coalesce(F.sum("ntok"), F.lit(0)).cast("long").alias("n_tokens"),
         )
-        agg = base.groupBy("source").agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("ntok").alias("_t"),
-        )
-        return universe.join(agg, "source", "left").select(
-            "source",
-            F.lit(name).alias("stage"),
-            F.coalesce("_n", F.lit(0)).cast("long").alias("n_docs"),
-            F.coalesce("_t", F.lit(0)).cast("long").alias("n_tokens"),
-        )
+        if keys:
+            universe = docs.select(*keys).distinct()
+            agg = universe.join(agg, keys, "left").select(
+                *keys,
+                F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
+                F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
+            )
+        return agg.select(*keys, F.lit(name).alias("stage"), "n_docs", "n_tokens")
 
     ids_by_stage = _funnel_stage_ids(spark, sf_dir)
     exact_ids = ids_by_stage[0][1]
@@ -3258,13 +3239,12 @@ def corpus_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages = stages.unionByName(stage("2b_line_dedup", exact_ids, ctok))
     for name, ids in ids_by_stage[1:]:
         stages = stages.unionByName(stage(name, ids, tok))
-    raw = tok.groupBy("source").agg(
-        F.count(F.lit(1)).alias("_raw_n")
-    )
+    raw = tok.groupBy(*keys).agg(F.count(F.lit(1)).alias("_raw_n"))
     return (
-        stages.join(raw, "source")
+        # no keys: raw is one row, joined to every stage unconditionally
+        stages.join(F.broadcast(raw), keys or None)
         .select(
-            "source",
+            *keys,
             "stage",
             "n_docs",
             "n_tokens",
@@ -3273,8 +3253,21 @@ def corpus_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.col("_raw_n").cast("double")
             ).alias("pct_docs"),
         )
-        .orderBy("source", "stage")
+        .orderBy(*keys, "stage")
     )
+
+
+def corpus_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X162: the X148 curation funnel KEYED BY SOURCE (r10 VERDICT ask
+    #8) — the table that decides FEED drops: X131's contamination
+    matrix says which source leaks benchmark text, this says which
+    source's documents actually survive the chain (a feed whose
+    survival collapses at the near-dup or quality stage is a
+    candidate for removal at the intake, the cheapest place). A
+    source that loses everything at a stage still shows its zero row
+    (the row a feed review is looking for). Per-source monotonicity
+    pinned in pytest."""
+    return _curation_funnel(spark, sf_dir, ("source",))
 
 
 def corpus_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3290,49 +3283,7 @@ def corpus_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     caches (component labels, MinHash pairs); each stage adds one
     semi/anti join and the whole report is five metadata-scale
     aggregates stacked."""
-    docs = _docs(spark, sf_dir)
-    tok = docs.select(
-        "doc_id", F.size(text.tokens_col()).cast("long").alias("ntok")
-    )
-    # stage token accounting mirrors corpus_funnel_by_source: lined
-    # (as-crawled) until the 2b boilerplate strip, prose afterwards
-    ltok = _lined_tok(spark, sf_dir).select("doc_id", "ntok")
-    ctok = _clean_tok(spark, sf_dir).select("doc_id", "ntok")
-
-    def stage(name: str, ids: DataFrame | None, base_tok: DataFrame):
-        base = (
-            base_tok
-            if ids is None
-            else base_tok.join(ids, "doc_id")
-        )
-        return base.agg(
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("ntok"), F.lit(0)).cast("long").alias(
-                "n_tokens"
-            ),
-        )
-    ids_by_stage = _funnel_stage_ids(spark, sf_dir)
-    exact_ids = ids_by_stage[0][1]
-    stages = stage("1_raw", None, ltok)
-    stages = stages.unionByName(stage("2_exact_dedup", exact_ids, ltok))
-    stages = stages.unionByName(stage("2b_line_dedup", exact_ids, ctok))
-    for name, ids in ids_by_stage[1:]:
-        stages = stages.unionByName(stage(name, ids, tok))
-    raw = tok.agg(F.count(F.lit(1)).alias("_raw_n"))
-    return (
-        stages.crossJoin(F.broadcast(raw))
-        .select(
-            "stage",
-            "n_docs",
-            "n_tokens",
-            (
-                F.col("n_docs").cast("double")
-                / F.col("_raw_n").cast("double")
-            ).alias("pct_docs"),
-        )
-        .orderBy("stage")
-    )
+    return _curation_funnel(spark, sf_dir)
 
 
 #: quality floor for the composed curation pipeline (score is a sum of
@@ -3554,40 +3505,13 @@ def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged, only the input filter."""
     cand = _minhash_cands(spark, sf_dir)
     emitted = _minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    truth = _session_cached(
+    return _scored_against_truth(
         spark,
-        ("jaccard_truth", sf_dir, 3, 0.5),
-        lambda: dedup.ngram_jaccard_pairs(
-            _docs(spark, sf_dir), n=3, threshold=0.5
-        ).select("doc_a", "doc_b").transform(materialize),
-    )
-    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    out = None
-    for stage, pairs in [("candidates", cand), ("emitted", emitted)]:
-        n_pairs = pairs.agg(F.count(F.lit(1)).alias("n_pairs"))
-        n_hits = pairs.join(truth, ["doc_a", "doc_b"]).agg(
-            F.count(F.lit(1)).alias("n_hits")
-        )
-        row = (
-            n_pairs.crossJoin(F.broadcast(n_hits))
-            .crossJoin(F.broadcast(n_truth))
-            .select(F.lit(stage).alias("stage"), "n_pairs", "n_truth", "n_hits")
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.select(
+        sf_dir,
         "stage",
-        "n_pairs",
-        "n_truth",
-        "n_hits",
-        F.when(
-            F.col("n_pairs") > 0,
-            F.col("n_hits").cast("double") / F.col("n_pairs"),
-        ).alias("pair_precision"),
-        F.when(
-            F.col("n_truth") > 0,
-            F.col("n_hits").cast("double") / F.col("n_truth"),
-        ).alias("pair_recall"),
-    ).orderBy("stage")
+        [("candidates", cand), ("emitted", emitted)],
+        "pair_recall",
+    )
 
 
 def dedup_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3612,13 +3536,6 @@ def dedup_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, precision/recall one double division, oracle splices
     the signals' own registered SQL against the shared truth
     fragment."""
-    truth = _session_cached(
-        spark,
-        ("jaccard_truth", sf_dir, 3, 0.5),
-        lambda: dedup.ngram_jaccard_pairs(
-            _docs(spark, sf_dir), n=3, threshold=0.5
-        ).select("doc_a", "doc_b").transform(materialize),
-    )
     signals = {
         "minhash": _minhash_pairs(spark, sf_dir).select("doc_a", "doc_b"),
         "simhash": dedup.simhash_near_pairs(
@@ -3630,10 +3547,41 @@ def dedup_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         ),
     }
+    return _scored_against_truth(
+        spark, sf_dir, "signal", sorted(signals.items()), "jaccard_agreement"
+    )
+
+
+def _jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b): the EXACT shingle-Jaccard ≥ 0.5 pairs over
+    hashed 3-word shingles (dedup.ngram_jaccard_pairs), the ground
+    truth of the dedup audits — localCheckpointed at most once per
+    (session, sf_dir)."""
+    return _session_cached(
+        spark,
+        ("jaccard_truth", sf_dir, 3, 0.5),
+        lambda: dedup.ngram_jaccard_pairs(
+            _docs(spark, sf_dir), n=3, threshold=0.5
+        ).select("doc_a", "doc_b").transform(materialize),
+    )
+
+
+def _scored_against_truth(
+    spark: SparkSession,
+    sf_dir: str,
+    label: str,
+    named_pairs: list[tuple[str, DataFrame]],
+    recall: str,
+) -> DataFrame:
+    """One row per named (doc_a, doc_b) pair set, in ``label`` order:
+    (label, n_pairs, n_truth, n_hits, pair_precision, ``recall``)
+    against :func:`_jaccard_truth`. Counts are exact integers;
+    precision and recall are one double division each, NULL over an
+    empty denominator."""
+    truth = _jaccard_truth(spark, sf_dir)
     n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
     out = None
-    for name in sorted(signals):
-        pairs = signals[name]
+    for name, pairs in named_pairs:
         n_pairs = pairs.agg(F.count(F.lit(1)).alias("n_pairs"))
         n_hits = pairs.join(truth, ["doc_a", "doc_b"]).agg(
             F.count(F.lit(1)).alias("n_hits")
@@ -3641,11 +3589,11 @@ def dedup_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         row = (
             n_pairs.crossJoin(F.broadcast(n_hits))
             .crossJoin(F.broadcast(n_truth))
-            .select(F.lit(name).alias("signal"), "n_pairs", "n_truth", "n_hits")
+            .select(F.lit(name).alias(label), "n_pairs", "n_truth", "n_hits")
         )
         out = row if out is None else out.unionByName(row)
     return out.select(
-        "signal",
+        label,
         "n_pairs",
         "n_truth",
         "n_hits",
@@ -3656,8 +3604,8 @@ def dedup_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("n_truth") > 0,
             F.col("n_hits").cast("double") / F.col("n_truth"),
-        ).alias("jaccard_agreement"),
-    ).orderBy("signal")
+        ).alias(recall),
+    ).orderBy(label)
 
 
 # ---------------------------------------------------------------------------
@@ -4661,7 +4609,7 @@ def text_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     piece_len, cnt) rows by (count DESC, piece). The oracle unrolls
     the full training — substring lattice, per-round Viterbi DP
     position chain, recount + prune — as generated CTEs. See
-    text.unigram_vocab for the objective contract."""
+    text._unigram_loop for the objective contract."""
     counts, _seg = _unigram_pair(spark, sf_dir)
     return (
         counts.select(
@@ -4823,7 +4771,9 @@ def _afp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("afp_pairs", sf_dir),
         lambda: materialize(
             multimodal.afp_near_dup(
-                multimodal.rerendered_audio_assets(_docs(spark, sf_dir))
+                multimodal.rerendered_assets(
+                    _docs(spark, sf_dir), residue=1, min_len=1
+                )
             )
         ),
     )
@@ -4838,7 +4788,9 @@ def _video_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("video_pairs", sf_dir),
         lambda: materialize(
             multimodal.video_near_dup(
-                multimodal.rerendered_video_assets(_docs(spark, sf_dir))
+                multimodal.rerendered_assets(
+                    _docs(spark, sf_dir), residue=2, min_len=96
+                )
             )
         ),
     )
@@ -4920,12 +4872,12 @@ def mm_canonical_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("kind") == "image") & (F.length("content") > 4))
         .select("asset_id")
         .unionByName(
-            multimodal.rerendered_audio_assets(docs)
+            multimodal.rerendered_assets(docs, residue=1, min_len=1)
             .filter((F.col("kind") == "audio") & (F.length("content") > 4))
             .select("asset_id")
         )
         .unionByName(
-            multimodal.rerendered_video_assets(docs)
+            multimodal.rerendered_assets(docs, residue=2, min_len=96)
             .filter((F.col("kind") == "video") & (F.length("content") > 4))
             .select("asset_id")
         )
@@ -5005,7 +4957,7 @@ def mm_afp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole bands and verified by the same exact popcount
     (multimodal._band_near_dup, shared verbatim with the image path).
     Runs over the audio assets PLUS their deterministic re-renders
-    (multimodal.rerendered_audio_assets); because energy windows
+    (multimodal.rerendered_assets, residue 1); because energy windows
     PARTITION the payload, the one-char re-render flips ≤ 2 bits for
     EVERY text length — no ≥72-char guard, unlike the image grid's
     point samples. See multimodal.afp_near_dup."""
@@ -5022,7 +4974,7 @@ def mm_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch, never all-pairs), one exact positional comparison per
     candidate verifies; emission = equal length, ≤ 1 mismatching
     frame, ≥ 1 agreeing frame. Runs over the video assets PLUS their
-    deterministic re-renders (multimodal.rerendered_video_assets).
+    deterministic re-renders (multimodal.rerendered_assets, residue 2).
     Why not the X104/X142 banded grid: pooled sign-of-delta
     signatures degenerate on short frame sequences (measured 16,653
     hamming-0 false pairs at sf0.001) — sequences need sequence

@@ -1362,8 +1362,7 @@ def train_subspace_codebooks(
     frame, seeded from the deterministic stride sample of the SAME
     frame (or an explicit ``seed_books`` (sub, cell, cv) frame — the
     sampled-training path), with per-round lineage truncation. The
-    generic train loop behind :func:`train_pq_codebooks` (raw
-    subvectors) and the residual codebooks of
+    generic train loop behind the residual codebooks of
     :func:`topk_ivfpq_trained`."""
     from aws_kinesis_data_ingestion_restapi_spark.operators.ckpt import (
         materialize,
@@ -1398,27 +1397,6 @@ def train_subspace_codebooks(
         if prev is not None:
             release(prev)
     return books
-
-
-def train_pq_codebooks(
-    embs: DataFrame,
-    rounds: int = KM_TRAIN_ROUNDS,
-    m: int = PQ_M,
-    centroid_stride: int | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """k-means-TRAINED per-subspace PQ codebooks over RAW subvectors:
-    ``rounds`` exact :func:`pq_new_codebooks` mean-updates from the
-    stride seed, with per-round lineage truncation. Returns
-    (sub, cell, cv) — drop-in for the ``pq_cents`` override of
-    :func:`topk_ivfpq` (the raw-code trained variant measured in
-    BENCH_NOTES "Round-9 trained-quantizer A/B")."""
-    if centroid_stride is None:
-        centroid_stride = auto_stride(embs.count())
-    subs, _ = _pq_parts(embs, m, centroid_stride, id_col)
-    return train_subspace_codebooks(
-        subs, rounds=rounds, centroid_stride=centroid_stride, id_col=id_col
-    )
 
 
 def train_residual_books(

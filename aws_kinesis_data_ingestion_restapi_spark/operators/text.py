@@ -397,6 +397,22 @@ def bm25_rank(
 
     from aws_kinesis_data_ingestion_restapi_spark.functions.exact import dsum
 
+    contribs = _bm25_contribs(
+        docs, lambda toks: toks.filter(F.col("tok").isin(list(query_terms))), k1, b
+    )
+    per_doc = contribs.groupBy("doc_id").agg(dsum(F.col("_c"), scale=6, alias="score"))
+    top = per_doc.orderBy(F.col("score").desc(), F.col("doc_id")).limit(top_n)
+    w = Window.partitionBy(F.lit(1)).orderBy(F.col("score").desc(), F.col("doc_id"))
+    return top.select(
+        "doc_id", "score", F.row_number().over(w).cast("int").alias("rank")
+    )
+
+
+def _bm25_contribs(docs: DataFrame, prune, k1: float, b: float) -> DataFrame:
+    """(doc_id, tok, _c): the log-free BM25 contribution of each (doc,
+    term) that ``prune`` keeps of the exploded (doc_id, _dl, tok)
+    stream — the scoring core of :func:`bm25_rank` and
+    :func:`bm25_rank_batch`."""
     toked = docs.select("doc_id", tokens_col().alias("_toks"))
     # corpus stats as a 1-row broadcast frame — no driver-side collect
     stats = toked.select(F.size("_toks").alias("dl")).agg(
@@ -404,12 +420,13 @@ def bm25_rank(
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     hits = (
-        toked.select(
-            "doc_id",
-            F.size("_toks").alias("_dl"),
-            F.explode("_toks").alias("tok"),
+        prune(
+            toked.select(
+                "doc_id",
+                F.size("_toks").alias("_dl"),
+                F.explode("_toks").alias("tok"),
+            )
         )
-        .filter(F.col("tok").isin(list(query_terms)))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("_dl").alias("dl"))
     )
@@ -421,12 +438,7 @@ def bm25_rank(
         F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / F.col("avgdl"))
     )
     contrib = idf * (F.col("tf") * F.lit(k1 + 1.0)) / denom
-    per_doc = scored.groupBy("doc_id").agg(dsum(contrib, scale=6, alias="score"))
-    top = per_doc.orderBy(F.col("score").desc(), F.col("doc_id")).limit(top_n)
-    w = Window.partitionBy(F.lit(1)).orderBy(F.col("score").desc(), F.col("doc_id"))
-    return top.select(
-        "doc_id", "score", F.row_number().over(w).cast("int").alias("rank")
-    )
+    return scored.select("doc_id", "tok", contrib.alias("_c"))
 
 
 # ---------------------------------------------------------------------------
@@ -1472,15 +1484,28 @@ def _unigram_viterbi(words: DataFrame, occs: DataFrame, scores: DataFrame):
 
 
 def _unigram_loop(words: DataFrame, rounds: int):
-    """The shared bounded EM loop (learn and apply both ride it, the
-    X102 learn/apply-share-one-loop contract): seed counts = substring
-    occurrence frequencies; each round = one exact Viterbi E-step
-    (:func:`_unigram_viterbi`) + one M-step recount over the chosen
-    paths + prune (pieces below UNIGRAM_PRUNE_MIN drop; single
-    characters always survive for coverage); after ``rounds`` EM
-    rounds one final E-step segments under the FINAL vocabulary.
-    Per-round lineage truncation via ckpt.materialize (the CC/BPE
-    pattern). Returns (final counts, final per-word segmentation)."""
+    """X139: the unigram-LM (SentencePiece-shape, Kudo 2018) tokenizer
+    trained by bounded hard-EM (Viterbi-EM) over the distinct-word
+    frequency table — the one loop the learn side (vocabulary) and the
+    apply side (per-doc segmentation) both ride, the X102
+    learn/apply-share-one-loop contract, so a segmentation is BY
+    CONSTRUCTION the one its vocabulary implies. Seed vocabulary =
+    every substring up to UNIGRAM_MAX_PIECE chars with its occurrence
+    frequency; each round = one exact-integer Viterbi E-step (see
+    :func:`_unigram_viterbi` for the documented objective
+    substitution) + one M-step path-usage recount + prune (pieces
+    below UNIGRAM_PRUNE_MIN drop; single characters always survive for
+    coverage); after ``rounds`` EM rounds one final E-step segments
+    under the FINAL vocabulary. Universe = segmentable words (length ≤
+    UNIGRAM_MAX_WORD, the X124 rule).
+
+    Scale shape: the loop runs on the DISTINCT-WORD table (≪ corpus —
+    the BPE decomposition); the candidate lattice is |word|·MAX_PIECE
+    rows per distinct word, built once; each DP step is one
+    word-keyed join against a broadcast vocabulary; the one
+    corpus-sized job is the initial word count. Per-round lineage
+    truncation via ckpt.materialize (the CC/BPE pattern). Returns
+    (final counts, final per-word segmentation)."""
     from aws_kinesis_data_ingestion_restapi_spark.operators.ckpt import (
         materialize,
         release,
@@ -1532,68 +1557,6 @@ def _unigram_loop(words: DataFrame, rounds: int):
     return counts, seg
 
 
-def unigram_vocab(
-    docs: DataFrame,
-    rounds: int = UNIGRAM_ROUNDS,
-    text_col: str = "text",
-    top: int = 200,
-) -> DataFrame:
-    """X139 LEARN side: the unigram-LM (SentencePiece-shape, Kudo
-    2018) tokenizer trained by bounded hard-EM (Viterbi-EM) over the
-    distinct-word frequency table — seed vocabulary = every substring
-    up to UNIGRAM_MAX_PIECE chars, E-step = exact-integer Viterbi
-    segmentation (see :func:`_unigram_viterbi` for the documented
-    objective substitution), M-step = path-usage recount + prune.
-    Returns the top-``top`` vocabulary rows (piece, piece_len, cnt)
-    by (count DESC, piece).
-
-    Scale shape: the loop runs on the DISTINCT-WORD table (≪ corpus —
-    the BPE decomposition); the candidate lattice is |word|·MAX_PIECE
-    rows per distinct word, built once; each DP step is one
-    word-keyed join against a broadcast vocabulary; the one
-    corpus-sized job is the initial word count."""
-    counts, _seg = _unigram_loop(_word_freqs(docs, text_col), rounds)
-    return (
-        counts.select(
-            "piece",
-            F.length("piece").cast("int").alias("piece_len"),
-            "cnt",
-        )
-        .orderBy(F.desc("cnt"), "piece")
-        .limit(top)
-    )
-
-
-def unigram_segment(
-    docs: DataFrame,
-    rounds: int = UNIGRAM_ROUNDS,
-    text_col: str = "text",
-) -> DataFrame:
-    """X139 APPLY side: per-doc subword statistics under the trained
-    unigram vocabulary — (doc_id, n_words, n_unigram_tokens), the
-    exact shape bpe_segment reports for X103 so every downstream
-    budgeter (packing, mixture) can swap tokenizers by swapping the
-    counts frame. Learn and apply share :func:`_unigram_loop`, so the
-    segmentation is BY CONSTRUCTION the one the vocabulary implies.
-    Universe = segmentable words (length ≤ UNIGRAM_MAX_WORD, the X124
-    rule)."""
-    _counts, seg = _unigram_loop(_word_freqs(docs, text_col), rounds)
-    per_word = seg.select("word", F.col("k").alias("n_pieces"))
-    docw = docs.select(
-        F.col("doc_id"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("word"),
-    ).filter(F.length("word") > 0)
-    return (
-        docw.join(per_word, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_pieces").cast("long").alias("n_unigram_tokens"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 def unigram_pieces(
     docs: DataFrame, rounds: int = UNIGRAM_ROUNDS, text_col: str = "text"
 ) -> DataFrame:
@@ -1601,7 +1564,7 @@ def unigram_pieces(
     vocabulary — (word, piece, n_in_word) from the final Viterbi
     paths; the unigram leg of the X194 coverage audit. Universe =
     segmentable words (length ≤ UNIGRAM_MAX_WORD, the X124 rule),
-    exactly :func:`unigram_segment`'s."""
+    exactly :func:`_unigram_loop`'s."""
     _counts, seg = _unigram_loop(_word_freqs(docs, text_col), rounds)
     return (
         seg.select("word", F.explode("path").alias("piece"))
@@ -1677,8 +1640,8 @@ def bm25_rank_batch(
     queries × corpus).
 
     ``queries``: (query_id, term) — one row per DISTINCT query term.
-    Scoring is :func:`bm25_rank`'s log-free BM25 verbatim (same
-    pinned parenthesization, same decimal-exact per-doc sum); df is
+    Scoring is :func:`bm25_rank`'s core (:func:`_bm25_contribs`, same
+    decimal-exact per-doc sum); df is
     term-global, so sharing the stats across queries changes nothing.
     Output: (query_id, doc_id, score, rank ≤ top_n), rank per query
     via a query-partitioned window (map-side group top-k, no global
@@ -1687,35 +1650,17 @@ def bm25_rank_batch(
 
     from aws_kinesis_data_ingestion_restapi_spark.functions.exact import dsum
 
-    toked = docs.select("doc_id", tokens_col().alias("_toks"))
-    stats = toked.select(F.size("_toks").alias("dl")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
     terms = queries.select("term").distinct()
-    hits = (
-        toked.select(
-            "doc_id",
-            F.size("_toks").alias("_dl"),
-            F.explode("_toks").alias("tok"),
-        )
-        .join(F.broadcast(terms), F.col("tok") == F.col("term"))
-        .drop("term")
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("_dl").alias("dl"))
+    contribs = _bm25_contribs(
+        docs,
+        lambda toks: toks.join(
+            F.broadcast(terms), F.col("tok") == F.col("term")
+        ).drop("term"),
+        k1,
+        b,
     )
-    dfs = hits.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    scored = hits.join(F.broadcast(dfs), "tok").crossJoin(F.broadcast(stats))
-    idf = (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (
-        F.col("df") + F.lit(0.5)
-    )
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / F.col("avgdl"))
-    )
-    contrib = idf * (F.col("tf") * F.lit(k1 + 1.0)) / denom
     per_q = (
-        scored.withColumn("_c", contrib)
-        .join(F.broadcast(queries), F.col("tok") == queries["term"])
+        contribs.join(F.broadcast(queries), F.col("tok") == queries["term"])
         .groupBy("query_id", "doc_id")
         .agg(dsum(F.col("_c"), scale=6, alias="score"))
     )

@@ -104,19 +104,25 @@ def pipeline_envelope_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _session_scratch(spark: SparkSession, prefix: str) -> str:
-    """Fixed per-session scratch dir (applicationId-keyed): per-call
-    mkdtemp accumulated unbounded temp litter across repeated
-    gate/bench runs (round-5 ADVICE); overwrite-mode writes make
-    reuse idempotent. One helper so every scratch consumer shares the
+    """Fixed per-session scratch dir (applicationId-keyed), so repeated
+    calls in one session reuse it; overwrite-mode writes make reuse
+    idempotent. Every process has its own applicationId, so the dir
+    is removed at interpreter exit (the ``_payment_match_streams``
+    feed-dir rule); one helper so every scratch consumer shares the
     same contract."""
+    import atexit
     import os
+    import shutil
     import tempfile
 
     base = os.path.join(
         tempfile.gettempdir(),
         f"{prefix}_{spark.sparkContext.applicationId}",
     )
-    os.makedirs(base, exist_ok=True)
+    if not os.path.isdir(base):
+        # register cleanup BEFORE the first write into the dir
+        atexit.register(shutil.rmtree, base, ignore_errors=True)
+        os.makedirs(base, exist_ok=True)
     return base
 
 

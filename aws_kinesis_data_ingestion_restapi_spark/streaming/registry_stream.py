@@ -329,8 +329,8 @@ def _payment_match_streams(spark: SparkSession, sf_dir: str, prefix: str):
     metadata-file sweep, and both watermarked readStreams. One
     definition so a fix to the interval, watermark, schemas, or sweep
     cannot silently apply to only one of the two gates. Returns
-    (left, right); the shared feed dir outlives the drains and is
-    removed at process exit."""
+    (left, right, feed_dirs); the shared feed dir outlives the drains
+    and is removed at process exit."""
     # The dual NDJSON dump is identical for the inner and leftOuter
     # gates (only the join mode differs), so it is generated ONCE per
     # (session, sf_dir) and shared — the second drain skips the whole
@@ -399,13 +399,20 @@ def _payment_match_streams(spark: SparkSession, sf_dir: str, prefix: str):
         .withColumn("p_ts", F.to_timestamp("p_ts"))
         .withWatermark("p_ts", "1 hour")
     )
-    return left, right
+    return left, right, [a_dir, b_dir]
 
 
 def _payment_match_drain(
-    spark: SparkSession, sf_dir: str, how: str, prefix: str, qname: str
+    spark: SparkSession,
+    sf_dir: str,
+    how: str,
+    prefix: str,
+    qname: str,
+    cols=("order_id", "customer_id", "amount", "delay_hours"),
 ) -> DataFrame:
-    left, right = _payment_match_streams(spark, sf_dir, prefix)
+    """The payment interval join (``how``) of the shared feed, drained
+    and projected to ``cols``."""
+    left, right, feed = _payment_match_streams(spark, sf_dir, prefix)
     joined = left.join(
         right,
         F.expr(
@@ -414,13 +421,7 @@ def _payment_match_drain(
         ),
         how,
     )
-    feed = _PAYMENT_FEED_CACHE[(spark.sparkContext.applicationId, sf_dir)]
-    return _drain(
-        joined.select("order_id", "customer_id", "amount", "delay_hours"),
-        "append",
-        qname,
-        state_feed_dirs=list(feed),
-    )
+    return _drain(joined.select(*cols), "append", qname, state_feed_dirs=feed)
 
 
 def streaming_payment_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -810,26 +811,18 @@ def streaming_payment_match_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     The output key is COALESCE(order_id, p_order_id): NULL-padded
     sides still identify their entity. State bounded by the range
     condition exactly as in the other two modes."""
-    left, right = _payment_match_streams(spark, sf_dir, "stream_fjoin_")
-    joined = left.join(
-        right,
-        F.expr(
-            "order_id = p_order_id AND "
-            "p_ts >= o_ts AND p_ts <= o_ts + INTERVAL 72 HOURS"
-        ),
+    return _payment_match_drain(
+        spark,
+        sf_dir,
         "fullOuter",
-    )
-    feed = _PAYMENT_FEED_CACHE[(spark.sparkContext.applicationId, sf_dir)]
-    return _drain(
-        joined.select(
+        "stream_fjoin_",
+        "sfjoin",
+        cols=(
             F.coalesce("order_id", "p_order_id").alias("order_key"),
             "customer_id",
             "amount",
             "delay_hours",
         ),
-        "append",
-        "sfjoin",
-        state_feed_dirs=list(feed),
     )
 
 
@@ -1032,24 +1025,34 @@ def streaming_cusum_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale day table. The oracle shares the batch oracle's generated
     core (one template, two day universes — here restricted to days
     whose end ≤ final watermark)."""
+    return analytics.cusum_scores(_closed_day_counts(spark, sf_dir, "cusum"))
+
+
+def _closed_day_counts(
+    spark: SparkSession, sf_dir: str, name: str, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """The drained (*keys, day, n) panel of the two per-day detector
+    gates: exact per-(keys, day) event counts of the replayed event
+    stream under a 1-hour watermark in append mode, so only
+    watermark-CLOSED days emit (the X40 rule). Stream state is one
+    counter per open (keys, day); ``name`` tags the fixture dir and
+    the drained query."""
     events = analytics._t(spark, sf_dir, "events")
     base_cols = events.select(
-        F.date_format(as_timestamp(events, "ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts")
+        F.date_format(as_timestamp(events, "ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+        *keys,
     )
-    raw, d = _replayed_stream(
-        spark, base_cols, "ts string", 1, "stream_cusum_"
-    )
+    schema = ", ".join(["ts string"] + [f"{k} long" for k in keys])
+    raw, d = _replayed_stream(spark, base_cols, schema, 1, f"stream_{name}_")
     stream = raw.withColumn("ts", F.to_timestamp("ts")).withWatermark(
         "ts", "1 hour"
     )
     agg = (
-        stream.groupBy(F.window("ts", "1 day").alias("w"))
+        stream.groupBy(F.window("ts", "1 day").alias("w"), *keys)
         .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.to_date(F.col("w.start")).alias("day"), "n")
+        .select(*keys, F.to_date(F.col("w.start")).alias("day"), "n")
     )
-    panel = _drain(agg, "append", "scusum", cleanup_dir=d,
-                   state_feed_dirs=[d])
-    return analytics.cusum_scores(panel)
+    return _drain(agg, "append", f"s{name}", cleanup_dir=d, state_feed_dirs=[d])
 
 
 def streaming_user_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1066,27 +1069,9 @@ def streaming_user_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         user_anomaly_scores,
     )
 
-    events = analytics._t(spark, sf_dir, "events")
-    base_cols = events.select(
-        F.date_format(as_timestamp(events, "ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "user_id",
+    return user_anomaly_scores(
+        _closed_day_counts(spark, sf_dir, "uanom", ("user_id",))
     )
-    raw, d = _replayed_stream(
-        spark, base_cols, "ts string, user_id long", 1, "stream_uanom_"
-    )
-    stream = raw.withColumn("ts", F.to_timestamp("ts")).withWatermark(
-        "ts", "1 hour"
-    )
-    agg = (
-        stream.groupBy(F.window("ts", "1 day").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "user_id", F.to_date(F.col("w.start")).alias("day"), "n"
-        )
-    )
-    panel = _drain(agg, "append", "suanom", cleanup_dir=d,
-                   state_feed_dirs=[d])
-    return user_anomaly_scores(panel)
 
 
 def _er_dirty_universe(spark: SparkSession, sf_dir: str) -> DataFrame:

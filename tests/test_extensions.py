@@ -3428,6 +3428,23 @@ def test_cusum_closed_form_and_level_shift_fixture(spark):
         if (r["day"] - d0).days < 20
     )
 
+    # the per-key path: two users, the shift in user 1 only — each
+    # user gets its own baseline and closed form, so user 1 reproduces
+    # the day-table result row for row and user 2 never alarms
+    flat = counts[:20] + [98 if i % 2 == 0 else 102 for i in range(24)]
+    per_user = spark.createDataFrame(
+        [(1, d, n) for d, n in rows]
+        + [(2, d, n) for (d, _), n in zip(rows, flat)],
+        ["user_id", "day", "n"],
+    )
+    keyed = analytics.cusum_scores(per_user, ("user_id",)).collect()
+    assert [tuple(r)[1:] for r in keyed if r["user_id"] == 1] == [
+        tuple(r) for r in out
+    ]
+    quiet = [r for r in keyed if r["user_id"] == 2]
+    assert len(quiet) == len(flat) - analytics.CUSUM_BASELINE_DAYS
+    assert not any(r["alarm"] or r["is_changepoint"] for r in quiet)
+
 
 def test_unigram_viterbi_matches_bruteforce(spark):
     """X139 property pin: the unrolled DP must pick, for EVERY word,
@@ -3591,7 +3608,9 @@ def test_afp_rerender_pairs_always_within_threshold(spark):
         tiny = spark.createDataFrame(
             [(1, "abcdefghij")], ["doc_id", "text"]
         )
-        pairs = mm.afp_near_dup(mm.rerendered_audio_assets(tiny)).collect()
+        pairs = mm.afp_near_dup(
+            mm.rerendered_assets(tiny, residue=1, min_len=1)
+        ).collect()
         assert [(p["asset_a"], p["asset_b"]) for p in pairs] == [
             (1, 30_000_001)
         ]
