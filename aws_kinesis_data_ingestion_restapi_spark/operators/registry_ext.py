@@ -1469,6 +1469,27 @@ def sketch_distinct_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang")
 
 
+def _exact_distinct_audit(
+    grams: DataFrame, est: DataFrame, sketch_col: str, rel_err: F.Column
+) -> DataFrame:
+    """The exact side of a per-language distinct-sketch audit: the
+    exact distinct gram count of ``grams`` joined to the sketch's
+    estimate frame ``est``, keeping its ``sketch_col`` and scoring it
+    with ``rel_err`` (an expression of ``est_distinct`` and
+    ``exact_distinct``)."""
+    exact = grams.groupBy("lang").agg(
+        F.countDistinct("gram").alias("exact_distinct")
+    )
+    return (
+        est.join(exact, "lang")
+        .select(
+            "lang", sketch_col, "est_distinct", "exact_distinct",
+            rel_err.alias("rel_err"),
+        )
+        .orderBy("lang")
+    )
+
+
 def sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X147: sketch ACCURACY audit — X33's θ-sample distinct estimate
     measured against the exact distinct count it approximates, per
@@ -1481,24 +1502,12 @@ def sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboards keep reading the sketch."""
     grams = _lang_trigrams(spark, sf_dir)
     est = sketch.theta_distinct(grams, ["lang"], "gram", theta_hex_digits=1)
-    exact = grams.groupBy("lang").agg(
-        F.countDistinct("gram").alias("exact_distinct")
-    )
-    return (
-        est.join(exact, "lang")
-        .select(
-            "lang",
-            "n_sampled",
-            "est_distinct",
-            "exact_distinct",
-            (
-                (
-                    F.col("est_distinct") - F.col("exact_distinct")
-                ).cast("double")
-                / F.col("exact_distinct").cast("double")
-            ).alias("rel_err"),
-        )
-        .orderBy("lang")
+    return _exact_distinct_audit(
+        grams,
+        est,
+        "n_sampled",
+        (F.col("est_distinct") - F.col("exact_distinct")).cast("double")
+        / F.col("exact_distinct").cast("double"),
     )
 
 
@@ -1521,22 +1530,12 @@ def docs_hll_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = _lang_trigrams(spark, sf_dir)
     regs = sketch.hll_registers(grams, ["lang"], "gram")
     est = sketch.hll_estimate(regs, ["lang"])
-    exact = grams.groupBy("lang").agg(
-        F.countDistinct("gram").alias("exact_distinct")
-    )
-    return (
-        est.join(exact, "lang")
-        .select(
-            "lang",
-            "n_zero_regs",
-            "est_distinct",
-            "exact_distinct",
-            (
-                (F.col("est_distinct") - F.col("exact_distinct").cast("double"))
-                / F.col("exact_distinct").cast("double")
-            ).alias("rel_err"),
-        )
-        .orderBy("lang")
+    return _exact_distinct_audit(
+        grams,
+        est,
+        "n_zero_regs",
+        (F.col("est_distinct") - F.col("exact_distinct").cast("double"))
+        / F.col("exact_distinct").cast("double"),
     )
 
 

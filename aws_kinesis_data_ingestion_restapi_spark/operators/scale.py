@@ -329,14 +329,14 @@ def compact_table(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(tmp)
-    # Rename-aside swap (same discipline as sinks._swap_buckets): the
-    # original data stays on disk under the aside name until the new
-    # directory is in place, so a crash at any point leaves the data
-    # recoverable — between the two renames it sits under the aside
-    # name, which the entry recovery above renames back on the next
-    # run. The earlier delete-then-rename form had a window where a
-    # crash lost the original. Hadoop rename reports most failures by
-    # returning false, not raising — every return value is checked.
+    # Rename-aside swap: the original data stays on disk under the
+    # aside name until the new directory is in place, so a crash at
+    # any point leaves the data recoverable — between the two renames
+    # it sits under the aside name, which the entry recovery above
+    # renames back on the next run. A delete-then-rename form would
+    # have a window where a crash loses the original. Hadoop rename
+    # reports most failures by returning false, not raising — every
+    # return value is checked.
     if not fs.rename(p_old, p_aside):
         fs.delete(p_tmp, True)
         raise RuntimeError(f"compaction aside rename failed; {path} untouched")
@@ -442,8 +442,8 @@ def write_zordered(
     balanced by ROW COUNT even when the key space is sparse or
     skewed — the data-layout analogue of compaction's size bound. At
     100 TB this is a per-partition maintenance rewrite exactly like
-    :func:`compact_table` (and would ride the same rename-aside swap
-    when rewriting in place; this writer targets a fresh/overwrite
+    :func:`compact_table` (and would ride its rename-aside swap when
+    rewriting in place; this writer targets a fresh/overwrite
     location, the common case for a curated layout)."""
     if "_zkey" in df.columns:
         # same contract as salted_join's _salt guard: silently

@@ -9,19 +9,26 @@ REGISTERS the partition columns, so they are queryable and prunable
 The serving sink is the DynamoDB analog (main.tf:347-370): an
 idempotent keyed upsert on (customer_id, order_id). Without Delta in
 this environment, the MERGE is emulated with a hash-bucketed partial
-rewrite: the store is laid out as ``bucket=K/`` Hive partitions keyed
-by ``pmod(xxhash64(keys), SERVING_N_BUCKETS)``, and an upsert rewrites
-ONLY the buckets the batch touches — untouched bucket files stay
-byte-identical.
-The rewrite is one keyed merge behind one shuffle on ``bucket``: stored
-and new rows meet in a last-write-wins window per key. Rewrite cost
-scales with the batch's key spread, not the store size (the parquet
-analog of DynamoDB touching only the written partitions; on
-Delta/Iceberg the same logic is ``MERGE INTO``).
+rewrite: the store holds ``bucket=K/`` Hive partitions keyed by
+``pmod(xxhash64(keys), SERVING_N_BUCKETS)``, and a write rewrites
+ONLY the buckets its batch touches; the files of the others are
+carried over unchanged. The rewrite is one keyed merge behind one
+shuffle on ``bucket``: stored and new rows meet in a last-write-wins
+window per key. A batch of n keys misses a given bucket with
+probability (15/16)^n, so a 1,000-row batch rewrites all 16 buckets:
+the cost of a write grows with the store, not the batch.
 
-A store has one layout, bucketed from its first write: a directory
-holding only ``bucket=K`` dirs (and hidden debris). Any other visible
-entry is refused, so a foreign parquet dir is never merged into or
+Each write is atomic: a reader sees all of it or none, as no
+DynamoDB reader sees half of a ``put_item``. ``store_path`` is a
+relative symlink to ``<parent>/.<name>.versions/<N>/``; a write builds
+version N+1 beside N and commits it by renaming a new link onto
+``store_path`` (the Iceberg pattern of one pointer swap; on
+Delta/Iceberg the same logic is ``MERGE INTO``). Every reader follows
+the link, so a plain ``spark.read.parquet(store_path)`` sees version N
+or N+1, never a mix.
+
+A store has one layout from its first write. Any other entry at the
+path is refused, so a foreign parquet dir is never merged into or
 overwritten.
 """
 
@@ -29,7 +36,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,21 +128,6 @@ def _bucket_expr():
     return F.pmod(F.xxhash64(*SERVING_KEYS), F.lit(SERVING_N_BUCKETS)).cast("int")
 
 
-def _has_buckets(store_path: str) -> bool:
-    """The store check, one listing: True when the store holds
-    ``bucket=K`` dirs (merge into them), False when it holds no visible
-    entry (new, or emptied by deletes: write in place). Any other
-    visible entry raises, naming the path."""
-    entries = os.listdir(store_path) if os.path.exists(store_path) else []
-    visible = [e for e in entries if not e.startswith(("_", "."))]
-    foreign = sorted(e for e in visible if not e.startswith("bucket="))
-    if foreign:
-        raise ValueError(
-            f"{store_path} is not a bucketed serving store: it holds {foreign[:3]}"
-        )
-    return bool(visible)
-
-
 def serving_upsert(spark: SparkSession, batch: DataFrame, store_path: str) -> None:
     """K4+E3: idempotent keyed upsert — the DynamoDB ``put_item`` analog.
 
@@ -151,17 +142,20 @@ def serving_upsert(spark: SparkSession, batch: DataFrame, store_path: str) -> No
     as one keyed merge behind one shuffle (:func:`_rewrite_buckets`);
     untouched bucket files are never opened, and the touched-bucket
     list collected to the driver is bounded by ``SERVING_N_BUCKETS``.
-    Each bucket swap is a rename-aside (old dir renamed away, new dir
-    renamed in, aside deleted) — NOT atomic, but the unrecoverable
-    window is two pure renames and a crash never leaves the store
-    without the bucket's data on disk; cross-bucket atomicity needs a
-    transactional format (``MERGE INTO`` on Delta/Iceberg — the
-    documented production target), matching the reference's per-item
-    (non-transactional) DynamoDB batch writes.
+    Even so the work grows with the store, not the batch: a 1,000-row
+    batch touches all 16 buckets.
+
+    Each write is atomic: it lands as a new version of the store,
+    committed by one link rename. Spark records file paths through the
+    link, so a DataFrame listed before a commit and run after it reads
+    the hard-linked files of untouched buckets unchanged and fails with
+    ``FAILED_READ_FILE.FILE_NOT_EXIST`` on a rewritten bucket; it never
+    silently mixes versions. One writer per store at a time: two
+    concurrent writes would both build the same next version.
 
     The bucket count is fixed (:data:`SERVING_N_BUCKETS`); nothing
-    re-buckets a store. A new or emptied store is written bucketed in
-    place; a path holding anything but ``bucket=K`` dirs raises
+    re-buckets a store. A new store (no path, or an empty dir) is
+    written whole; a path holding anything but the store's link raises
     ``ValueError`` and is left untouched.
     """
     new = batch.withColumn("_del", F.lit(False))
@@ -175,29 +169,84 @@ def _write_buckets(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
+def _versions_dir(store: str) -> str:
+    """``<parent>/.<name>.versions``: hidden, so no listing of the
+    parent picks the superseded versions up."""
+    parent, name = os.path.split(store)
+    return os.path.join(parent, f".{name}.versions")
+
+
+def _live_version(store: str) -> int | None:
+    """The version the store's link names, or None for a new store
+    (no path, or an empty dir). Anything else at the path raises,
+    naming it, before anything is touched."""
+    if os.path.islink(store):
+        head, _, version = os.readlink(store).rpartition("/")
+        if head == os.path.basename(_versions_dir(store)) and version.isdigit():
+            return int(version)
+    elif not os.path.exists(store) or (os.path.isdir(store) and not os.listdir(store)):
+        return None
+    raise ValueError(
+        f"{store} is not a serving store (a link into {_versions_dir(store)})"
+    )
+
+
+def _drop_stale(versions: str, keep: int | None) -> None:
+    """Delete every entry of the versions dir but version ``keep``:
+    superseded versions, and whatever a crashed write left there (a
+    partial version, an uncommitted link)."""
+    if not os.path.isdir(versions):
+        return
+    for entry in os.listdir(versions):
+        if entry == str(keep):
+            continue
+        path = os.path.join(versions, entry)
+        if os.path.isdir(path) and not os.path.islink(path):
+            shutil.rmtree(path)
+        else:
+            os.remove(path)
+
+
 def _rewrite_buckets(spark: SparkSession, store_path: str, new: DataFrame) -> None:
     """The keyed merge both serving writers share. ``new`` holds the
     change rows plus a boolean ``_del`` (a tombstone). Per key of a
     touched bucket one row survives, a ``new`` row over a stored one;
     a surviving tombstone is dropped (a bucket left empty is removed).
 
-    Crash recovery runs FIRST, before any read: a prior run may have
-    left the only copy of a bucket under an aside name. Then one
-    listing (:func:`_has_buckets`) picks the path: merge into the
-    stored buckets, or write a new or emptied store in place.
+    The write makes version N+1 beside the live version N, then
+    commits it with one atomic step:
+
+    1. delete every entry of the versions dir but N (what a crashed
+       write left there);
+    2. write the merged touched buckets into N+1;
+    3. hard-link the files of every untouched bucket of N into N+1,
+       so an untouched file keeps its name and inode;
+    4. commit: a new link to N+1, renamed onto ``store_path``;
+    5. delete N.
+
+    A crash before step 4 leaves the link on N, whole; a crash after
+    it leaves N+1 live. Either way step 1 of the next write clears the
+    rest.
 
     One shuffle: the stored rows of the touched buckets (a
     partition-pruned, schema-inferred read, so a store/batch column
     mismatch fails loudly in ``unionByName``) and ``new`` are
     hash-partitioned on ``bucket``, which also satisfies the window
     (keyed on ``bucket`` + keys) and the partitioned write."""
-    _recover_debris(store_path)
+    store = store_path.rstrip("/")
+    versions = _versions_dir(store)
+    live = _live_version(store)
+    _drop_stale(versions, live)
+    live_dir = os.path.join(versions, str(live))
+    stored_buckets = [] if live is None else sorted(
+        e for e in os.listdir(live_dir) if e.startswith("bucket=")
+    )
     merged = new.withColumns({"bucket": _bucket_expr(), "_new": F.lit(1)})
-    target, touched = store_path, None
-    if _has_buckets(store_path):
+    touched = []
+    if stored_buckets:
         # inferred before the collect: its footer-read job then runs
         # while the collect still waits on the batch's first read
-        stored = spark.read.parquet(store_path)
+        stored = spark.read.parquet(live_dir)
         touched = sorted(r[0] for r in merged.select("bucket").distinct().collect())
         if not touched:
             return
@@ -206,7 +255,8 @@ def _rewrite_buckets(spark: SparkSession, store_path: str, new: DataFrame) -> No
              "_new": F.lit(0)}
         )
         merged = existing.unionByName(merged)
-        target = store_path.rstrip("/") + f"._staging_{uuid.uuid4().hex}"
+    version = (live or 0) + 1
+    target = os.path.join(versions, str(version))
     w = Window.partitionBy("bucket", *SERVING_KEYS).orderBy(F.desc("_new"))
     _write_buckets(
         merged.repartition("bucket")
@@ -215,76 +265,17 @@ def _rewrite_buckets(spark: SparkSession, store_path: str, new: DataFrame) -> No
         .drop("_rn", "_new", "_del"),
         target,
     )
-    if touched is not None:
-        _swap_buckets(target, store_path, touched)
-
-
-def _recover_debris(store_path: str) -> None:
-    """Entry-time crash recovery, run before ANY read of the store.
-
-    Two debris classes:
-
-    1. Per-bucket asides (``._old_bucket=K`` inside the store, left by
-       :func:`_swap_buckets`): a missing ``bucket=K`` means the aside
-       holds that bucket's ONLY rows (the crash hit between the two
-       replaces) — rename it back; without the restore the
-       partition-pruned scan sees zero existing rows for K and every
-       key not in the new batch is silently lost. An aside next to an
-       intact ``bucket=K`` is a stale copy from after the second
-       replace — delete it.
-    2. Crashed staging siblings (``<store>._staging_<uuid>``): a run
-       that died between its staging write and the swap leaves a full
-       merged copy of the touched buckets under a uuid name no later
-       run ever references — readers never see it (hidden), but each
-       crash would otherwise leak a store-sized directory forever.
-
-    Single-writer contract (documented on serving_upsert): no
-    concurrent upsert's LIVE staging dir can be present here."""
-    if os.path.isdir(store_path):
-        for entry in os.listdir(store_path):
-            if entry.startswith("._old_bucket="):
-                aside = os.path.join(store_path, entry)
-                bucket = os.path.join(store_path, entry[len("._old_"):])
-                if os.path.exists(bucket):
-                    shutil.rmtree(aside)
-                else:
-                    os.replace(aside, bucket)
-    parent, name = os.path.split(store_path.rstrip("/"))
-    parent = parent or "."
-    if os.path.isdir(parent):
-        for entry in os.listdir(parent):
-            if entry.startswith(name + "._staging_"):
-                shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
-
-
-def _swap_buckets(staging: str, store_path: str, touched: list[int]) -> None:
-    """Swap each touched bucket via rename-aside: old data stays
-    readable (under a hidden aside dir) until the new dir is in place,
-    so a crash anywhere leaves every bucket's rows on disk — between
-    the two replaces they sit under the aside name, which
-    :func:`_recover_debris` renames back at the next upsert's
-    entry. Cross-bucket atomicity still needs a transactional table
-    format (Delta/Iceberg MERGE INTO — the documented production
-    target). A touched bucket with NO staged dir (every row deleted)
-    is removed."""
-    for b in touched:
-        src = os.path.join(staging, f"bucket={b}")
-        dst = os.path.join(store_path, f"bucket={b}")
-        # leading dot: Spark's file listing ignores hidden entries, so
-        # a crash-leftover aside dir is invisible to readers
-        aside = os.path.join(store_path, f"._old_bucket={b}")
-        if os.path.exists(aside):
-            # entry recovery ran before the store was read, so any
-            # aside still present alongside its bucket is stale
-            shutil.rmtree(aside)
-        had_old = os.path.exists(dst)
-        if had_old:
-            os.replace(dst, aside)
-        if os.path.exists(src):
-            os.replace(src, dst)
-        if had_old:
-            shutil.rmtree(aside)
-    shutil.rmtree(staging, ignore_errors=True)
+    for name in stored_buckets:
+        if int(name[len("bucket="):]) not in touched:
+            os.mkdir(os.path.join(target, name))
+            for f in os.listdir(os.path.join(live_dir, name)):
+                os.link(os.path.join(live_dir, name, f), os.path.join(target, name, f))
+    link = os.path.join(versions, "link")
+    os.symlink(os.path.join(os.path.basename(versions), str(version)), link)
+    if not os.path.islink(store) and os.path.isdir(store):
+        os.rmdir(store)  # a new store's empty dir; a rename cannot replace it
+    os.replace(link, store)
+    _drop_stale(versions, version)
 
 
 def serving_apply_changes(

@@ -90,13 +90,17 @@ print("duckdb cross-check: total_sales_per_country OK over", len(oc), "countries
 
 # replay idempotence probe: serving upsert same batch twice
 store = os.path.join(base, "store")
-shutil.rmtree(store, ignore_errors=True)
 odf = tables["orders"]
 serving_upsert(spark, odf, store)
 c1 = spark.read.parquet(store).count()
 serving_upsert(spark, odf, store)
 c2 = spark.read.parquet(store).count()
 assert c1 == c2 == ng, (c1, c2, ng)
+# the store is a link to its one live version
+versions = os.listdir(os.path.join(base, ".store.versions"))
+assert os.path.islink(store) and versions == [os.path.basename(os.readlink(store))], (
+    versions
+)
 print("serving replay idempotent:", c1)
 
 # empty NDJSON probe

@@ -1,21 +1,26 @@
-"""Serving-store upsert: hash-bucketed partial rewrite (K4+E3).
+"""Serving-store writes (K4+E3) and the table and error sinks.
 
-The scale property under test: an upsert rewrites ONLY the buckets its
-batch touches — every file in an untouched bucket is byte-identical
-afterwards (not merely equal-valued), so rewrite cost scales with the
-batch's key spread, not the store size.
+The serving store is a link to its live version dir, which holds one
+``bucket=K/`` dir per hash bucket. A write rewrites ONLY the buckets
+its batch touches; every file of an untouched bucket is carried into
+the next version as a hard link (same bytes, same inode). The crash
+matrix stops a write at each of its filesystem steps and checks that
+a plain read sees the old store or the new one, never a mix.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from aws_kinesis_data_ingestion_restapi_spark import sinks
 from aws_kinesis_data_ingestion_restapi_spark.sinks import (
     SERVING_KEYS,
     SERVING_N_BUCKETS,
@@ -45,6 +50,7 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     serving_upsert(spark, _rows(spark, keys, "pending"), store)
 
     before = _file_hashes(store)
+    inodes = {rel: os.stat(os.path.join(store, rel)).st_ino for rel in before}
     buckets_present = {p.split(os.sep)[0] for p in before}
     assert len(buckets_present) > 1, "need multiple buckets for the test to bite"
 
@@ -61,6 +67,9 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         if bucket != touched:
             assert rel in after, f"untouched file {rel} disappeared"
             assert after[rel] == digest, f"untouched file {rel} was rewritten"
+            assert os.stat(os.path.join(store, rel)).st_ino == inodes[rel], (
+                f"untouched file {rel} was copied, not linked"
+            )
     # ...and the touched bucket actually changed
     changed = {
         rel for rel in set(before) | set(after)
@@ -193,6 +202,16 @@ def test_upsert_into_emptied_store(spark, tmp_path):
     assert got == [("c2", "o2", "shipped")]
 
 
+def test_upsert_into_an_empty_dir_makes_the_store_link(spark, tmp_path):
+    """An empty dir at the store path is a new store: the write
+    replaces it with the link to the store's first version."""
+    store = tmp_path / "serving"
+    store.mkdir()
+    serving_upsert(spark, _rows(spark, [("c1", "o1")], "pending"), str(store))
+    assert os.readlink(store) == os.path.join(".serving.versions", "1")
+    assert spark.read.parquet(str(store)).count() == 1
+
+
 def test_upsert_refuses_a_flat_parquet_dir(spark, tmp_path):
     """A path holding anything but ``bucket=K`` dirs is not a serving
     store: both writers raise, naming it, and leave every file as it
@@ -254,58 +273,6 @@ def test_apply_changes_roundtrips_snapshot_diff(spark, tmp_path):
     assert contents() == want
 
 
-def test_apply_changes_restores_bucket_lost_mid_swap(spark, tmp_path):
-    """serving_apply_changes shares serving_upsert's rename-aside swap
-    and must run the same entry recovery: with bucket=K gone and
-    ._old_bucket=K holding its only rows, applying a change feed that
-    touches K must first restore the aside — otherwise every
-    unchanged key in K is silently dropped from the store."""
-    from aws_kinesis_data_ingestion_restapi_spark.operators.cdc import snapshot_diff
-    from aws_kinesis_data_ingestion_restapi_spark.sinks import serving_apply_changes
-
-    store = str(tmp_path / "store_crash")
-    v1 = _snap(spark, [(f"c{i}", f"o{i}", 1.0 * i) for i in range(40)])
-    serving_upsert(spark, v1, store)
-    # v2 updates exactly one key; find that key's bucket and crash it
-    v2 = _snap(
-        spark,
-        [(f"c{i}", f"o{i}", 1.0 * i if i != 3 else 999.0) for i in range(40)],
-    )
-    b = _rows(spark, [("c3", "o3")], "x").select(
-        _bucket_expr().alias("b")
-    ).first()["b"]
-    os.replace(
-        os.path.join(store, f"bucket={b}"),
-        os.path.join(store, f"._old_bucket={b}"),
-    )
-
-    changes = snapshot_diff(v1, v2, keys=SERVING_KEYS, compare_cols=["amount"])
-    serving_apply_changes(spark, changes, v2, store)
-    got = sorted(
-        (r["customer_id"], r["order_id"], r["amount"])
-        for r in spark.read.parquet(store).collect()
-    )
-    assert got == sorted(tuple(r) for r in v2.collect()), (
-        "unchanged keys sharing the crashed bucket must survive"
-    )
-
-
-def test_upsert_reclaims_crashed_staging_litter(spark, tmp_path):
-    """A run that dies between its staging write and the swap leaves a
-    full merged copy under <store>._staging_<uuid> that no later run
-    references — entry recovery must reclaim it or every crash leaks
-    a store-sized directory."""
-    store = str(tmp_path / "serving_lit")
-    serving_upsert(spark, _rows(spark, [("c1", "o1")], "a"), store)
-    litter = store + "._staging_deadbeefcafe"
-    os.makedirs(os.path.join(litter, "bucket=0"))
-    with open(os.path.join(litter, "bucket=0", "junk"), "w") as f:
-        f.write("x")
-    serving_upsert(spark, _rows(spark, [("c2", "o2")], "b"), store)
-    assert not os.path.exists(litter)
-    assert spark.read.parquet(store).count() == 2
-
-
 def test_apply_changes_drops_fully_deleted_bucket(spark, tmp_path):
     """Deleting every key of a bucket removes its directory."""
     from aws_kinesis_data_ingestion_restapi_spark.operators.cdc import snapshot_diff
@@ -324,65 +291,129 @@ def test_apply_changes_drops_fully_deleted_bucket(spark, tmp_path):
     assert remaining == []
 
 
-def test_upsert_recovers_from_crashed_swap_debris(spark, tmp_path):
-    """A crash between _swap_buckets' two renames leaves a hidden
-    ._old_bucket=K aside dir. The NEXT upsert touching that bucket
-    must clear the debris and land the new values — and readers never
-    see the aside (leading dot = hidden to Spark listing)."""
-    import shutil
-
-    store = str(tmp_path / "serving")
-    keys = [(f"c{i}", f"o{i}") for i in range(50)]
-    serving_upsert(spark, _rows(spark, keys, "pending"), store)
-
-    target = keys[3]
-    b = _rows(spark, [target], "x").select(
-        _bucket_expr().alias("b")
-    ).first()["b"]
-    # simulate the crash window: the old bucket was renamed aside and
-    # the process died before the cleanup
-    src = os.path.join(store, f"bucket={b}")
-    aside = os.path.join(store, f"._old_bucket={b}")
-    shutil.copytree(src, aside)
-
-    serving_upsert(spark, _rows(spark, [target], "shipped"), store)
-    assert not os.path.exists(aside), "crash debris must be cleared"
-    out = spark.read.parquet(store)
-    assert out.count() == 50
-    got = out.filter(
-        (F.col("customer_id") == target[0]) & (F.col("order_id") == target[1])
-    ).collect()
-    assert len(got) == 1 and got[0]["status"] == "shipped"
+class _Crash(Exception):
+    """The process died at a filesystem step of a serving write."""
 
 
-def test_upsert_restores_bucket_lost_mid_swap(spark, tmp_path):
-    """The OTHER crash window: the process died BETWEEN the two
-    renames, so bucket=K is GONE and ._old_bucket=K holds its only
-    rows. The next upsert must rename the aside back BEFORE reading —
-    otherwise the pruned scan sees zero existing rows for K and every
-    key not in the new batch is silently lost."""
-    store = str(tmp_path / "serving")
-    keys = [(f"c{i}", f"o{i}") for i in range(50)]
-    serving_upsert(spark, _rows(spark, keys, "pending"), store)
+#: The filesystem steps of a serving write, and its Spark write.
+_CRASH_STEPS = [
+    (os, "replace"), (os, "link"), (os, "symlink"), (os, "mkdir"),
+    (os, "rmdir"), (os, "remove"), (shutil, "rmtree"), (sinks, "_write_buckets"),
+]
 
-    target = keys[3]
-    b = _rows(spark, [target], "x").select(
-        _bucket_expr().alias("b")
-    ).first()["b"]
-    # simulate the mid-swap crash: dst renamed away, new dir never
-    # landed — the aside is the bucket's ONLY copy
-    src = os.path.join(store, f"bucket={b}")
-    aside = os.path.join(store, f"._old_bucket={b}")
-    os.replace(src, aside)
 
-    serving_upsert(spark, _rows(spark, [target], "shipped"), store)
-    assert not os.path.exists(aside)
-    out = spark.read.parquet(store)
-    assert out.count() == 50, "keys sharing the crashed bucket must survive"
-    got = out.filter(
-        (F.col("customer_id") == target[0]) & (F.col("order_id") == target[1])
-    ).collect()
-    assert len(got) == 1 and got[0]["status"] == "shipped"
+@contextlib.contextmanager
+def _crash_at(monkeypatch, k):
+    """Count the calls of every step; the k-th and every later one
+    raises, as if the process died there (k=0 never raises). Yields
+    the count so far, a one-item list."""
+    calls = [0]
+
+    def wrap(fn):
+        def step(*args, **kwargs):
+            calls[0] += 1
+            if k and calls[0] >= k:
+                raise _Crash(calls[0])
+            return fn(*args, **kwargs)
+        return step
+
+    with monkeypatch.context() as m:
+        for mod, name in _CRASH_STEPS:
+            m.setattr(mod, name, wrap(getattr(mod, name)))
+        yield calls
+
+
+def _contents(spark, store):
+    return sorted(
+        (r["customer_id"], r["order_id"], r["amount"])
+        for r in spark.read.parquet(store).collect()
+    )
+
+
+def _litter(case):
+    """What sits beside the store or in its versions dir other than
+    the store's link and the one version it names."""
+    store, versions = case / "store", case / ".store.versions"
+    beside = sorted(set(os.listdir(case)) - {"store", ".store.versions"})
+    if not store.is_symlink() or not versions.is_dir():
+        return beside + ["<store is not a link into .store.versions>"]
+    live = os.readlink(store).rpartition("/")[2]
+    return beside + sorted(set(os.listdir(versions)) ^ {live})
+
+
+@pytest.mark.parametrize("writer", ["upsert", "apply_changes"])
+def test_serving_write_crash_matrix(spark, tmp_path, monkeypatch, writer):
+    """Stop a serving write at its k-th filesystem step, for every k
+    its crash-free run makes. Right after the crash a plain read sees
+    the store before the write or after it; re-running the write
+    gives the crash-free store; and the versions dir then holds only
+    the live version, with nothing left beside the store.
+
+    The store spans buckets A, B, C. The upsert updates a key of A and
+    adds one in a new bucket E; the change feed also deletes all of C,
+    so C's dir goes away. B is carried over by hard links."""
+    from aws_kinesis_data_ingestion_restapi_spark.operators.cdc import snapshot_diff
+    from aws_kinesis_data_ingestion_restapi_spark.sinks import serving_apply_changes
+
+    keys = [(f"c{i}", f"o{i}") for i in range(64)]
+    by_bucket = {}
+    for r in _rows(spark, keys, "x").select(
+        "customer_id", "order_id", _bucket_expr().alias("b")
+    ).collect():
+        by_bucket.setdefault(r["b"], []).append((r["customer_id"], r["order_id"]))
+    a, b, c, e = [ks for ks in by_bucket.values() if len(ks) >= 2][:4]
+    v1_rows = [(ci, oi, 1.0) for ci, oi in a[:2] + b[:2] + c[:2]]
+    v1 = _snap(spark, v1_rows)
+    batch = _snap(spark, [(*a[0], 2.0), (*e[0], 3.0)])
+    v2 = _snap(spark, v1_rows[1:4] + [(*a[0], 2.0), (*e[0], 3.0)])
+    diff = snapshot_diff(v1, v2, keys=SERVING_KEYS, compare_cols=["amount"])
+    changes = spark.createDataFrame(diff.collect(), diff.schema)  # diffed once
+
+    def write(store):
+        if writer == "upsert":
+            serving_upsert(spark, batch, store)
+        else:
+            serving_apply_changes(spark, changes, v2, store)
+
+    template = tmp_path / "template"
+    template.mkdir()
+    serving_upsert(spark, v1, str(template / "store"))
+    pre = _contents(spark, str(template / "store"))
+
+    def crashed_copy(name, k):
+        case = tmp_path / name
+        shutil.copytree(template, case, symlinks=True)
+        with _crash_at(monkeypatch, k) as calls:
+            try:
+                write(str(case / "store"))
+            except _Crash:
+                pass
+        return case, calls[0]
+
+    clean, n_steps = crashed_copy("clean", 0)
+    post = _contents(spark, str(clean / "store"))
+    assert post != pre and n_steps >= 8, (n_steps, post)
+    if writer == "apply_changes":
+        assert post == sorted(tuple(r) for r in v2.collect())
+
+    torn, diverged, litter = [], [], []
+    for k in range(1, n_steps + 1):
+        case, _ = crashed_copy(f"k{k}", k)
+        try:
+            seen = _contents(spark, str(case / "store"))
+        except Exception as err:  # a read that fails is a torn store too
+            seen = type(err).__name__
+        if seen not in (pre, post):
+            torn.append((k, seen if isinstance(seen, str) else len(seen)))
+        write(str(case / "store"))
+        if _contents(spark, str(case / "store")) != post:
+            diverged.append(k)
+        if _litter(case):
+            litter.append((k, _litter(case)))
+    assert not (torn or diverged or litter), (
+        f"{n_steps} steps; torn reads at {torn}; re-run diverged at "
+        f"{diverged}; litter at {litter}"
+    )
 
 
 def test_write_errors_batch_mode_empty_and_replay(spark, tmp_path):
