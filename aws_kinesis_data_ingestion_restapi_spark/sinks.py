@@ -8,15 +8,15 @@ REGISTERS the partition columns, so they are queryable and prunable
 
 The serving sink is the DynamoDB analog (main.tf:347-370): an
 idempotent keyed upsert on (customer_id, order_id). Without Delta in
-this environment, the MERGE is emulated with a hash-bucketed partial
-rewrite: the store holds ``bucket=K/`` Hive partitions keyed by
-``pmod(xxhash64(keys), SERVING_N_BUCKETS)``, and a write rewrites
-ONLY the buckets its batch touches; the files of the others are
-carried over unchanged. The rewrite is one keyed merge behind one
-shuffle on ``bucket``: stored and new rows meet in a last-write-wins
-window per key. A batch of n keys misses a given bucket with
-probability (15/16)^n, so a 1,000-row batch rewrites all 16 buckets:
-the cost of a write grows with the store, not the batch.
+this environment, the MERGE is emulated by rewriting the store: it
+holds ``bucket=K/`` Hive partitions keyed by
+``pmod(xxhash64(keys), SERVING_N_BUCKETS)``, and a write merges the
+whole live store with its batch, one keyed merge behind one shuffle
+on ``bucket``: stored and new rows meet in a last-write-wins window
+per key. Rewriting only the buckets a batch touches would save
+nothing here: a batch of n keys misses a given bucket with
+probability (15/16)^n, so a 1,000-row batch touches all 16. The cost
+of a write grows with the store, not the batch.
 
 Each write is atomic: a reader sees all of it or none, as no
 DynamoDB reader sees half of a ``put_item``. ``store_path`` is a
@@ -116,9 +116,9 @@ def write_errors(bad: DataFrame, base_path: str, batch_id: int) -> None:
 
 
 #: Bucket count of every serving store. It is part of the store's
-#: layout: an upsert reads only the buckets its batch hashes to, so a
-#: store written with another count would keep stale rows of keys that
-#: sit in their old bucket. Changing it needs a full rewrite of every
+#: layout: the merge matches a key only within its bucket, so a store
+#: written with another count would keep stale rows of keys that sit
+#: in their old bucket. Changing it needs a full rewrite of every
 #: store, which nothing here does.
 SERVING_N_BUCKETS = 16
 
@@ -138,20 +138,17 @@ def serving_upsert(spark: SparkSession, batch: DataFrame, store_path: str) -> No
 
     Scale design: the store is hash-bucketed on the key
     (``bucket=pmod(xxhash64(keys), SERVING_N_BUCKETS)`` Hive
-    partitions). An upsert reads and rewrites ONLY the touched buckets,
-    as one keyed merge behind one shuffle (:func:`_rewrite_buckets`);
-    untouched bucket files are never opened, and the touched-bucket
-    list collected to the driver is bounded by ``SERVING_N_BUCKETS``.
-    Even so the work grows with the store, not the batch: a 1,000-row
-    batch touches all 16 buckets.
+    partitions). An upsert merges the whole store with the batch, as
+    one keyed merge behind one shuffle (:func:`_rewrite_buckets`);
+    nothing is collected to the driver. The work grows with the store,
+    not the batch.
 
     Each write is atomic: it lands as a new version of the store,
     committed by one link rename. Spark records file paths through the
-    link, so a DataFrame listed before a commit and run after it reads
-    the hard-linked files of untouched buckets unchanged and fails with
-    ``FAILED_READ_FILE.FILE_NOT_EXIST`` on a rewritten bucket; it never
-    silently mixes versions. One writer per store at a time: two
-    concurrent writes would both build the same next version.
+    link, so a DataFrame listed before a commit and run after it fails
+    with ``FAILED_READ_FILE.FILE_NOT_EXIST``; it never silently mixes
+    versions. One writer per store at a time: two concurrent writes
+    would both build the same next version.
 
     The bucket count is fixed (:data:`SERVING_N_BUCKETS`); nothing
     re-buckets a store. A new store (no path, or an empty dir) is
@@ -209,52 +206,41 @@ def _drop_stale(versions: str, keep: int | None) -> None:
 
 def _rewrite_buckets(spark: SparkSession, store_path: str, new: DataFrame) -> None:
     """The keyed merge both serving writers share. ``new`` holds the
-    change rows plus a boolean ``_del`` (a tombstone). Per key of a
-    touched bucket one row survives, a ``new`` row over a stored one;
-    a surviving tombstone is dropped (a bucket left empty is removed).
+    change rows plus a boolean ``_del`` (a tombstone). Per key one row
+    survives, a ``new`` row over a stored one; a surviving tombstone is
+    dropped (a bucket left empty is removed).
 
     The write makes version N+1 beside the live version N, then
     commits it with one atomic step:
 
     1. delete every entry of the versions dir but N (what a crashed
        write left there);
-    2. write the merged touched buckets into N+1;
-    3. hard-link the files of every untouched bucket of N into N+1,
-       so an untouched file keeps its name and inode;
-    4. commit: a new link to N+1, renamed onto ``store_path``;
-    5. delete N.
+    2. write the merge of all of N with ``new`` into N+1;
+    3. commit: a new link to N+1, renamed onto ``store_path``;
+    4. delete N.
 
-    A crash before step 4 leaves the link on N, whole; a crash after
+    A crash before step 3 leaves the link on N, whole; a crash after
     it leaves N+1 live. Either way step 1 of the next write clears the
     rest.
 
-    One shuffle: the stored rows of the touched buckets (a
-    partition-pruned, schema-inferred read, so a store/batch column
-    mismatch fails loudly in ``unionByName``) and ``new`` are
-    hash-partitioned on ``bucket``, which also satisfies the window
-    (keyed on ``bucket`` + keys) and the partitioned write."""
+    One shuffle: the stored rows (a schema-inferred read, so a
+    store/batch column mismatch fails loudly in ``unionByName``) and
+    ``new`` are hash-partitioned on ``bucket``, which also satisfies
+    the window (keyed on ``bucket`` + keys) and the partitioned write."""
     store = store_path.rstrip("/")
     versions = _versions_dir(store)
     live = _live_version(store)
     _drop_stale(versions, live)
     live_dir = os.path.join(versions, str(live))
-    stored_buckets = [] if live is None else sorted(
-        e for e in os.listdir(live_dir) if e.startswith("bucket=")
-    )
     merged = new.withColumns({"bucket": _bucket_expr(), "_new": F.lit(1)})
-    touched = []
-    if stored_buckets:
-        # inferred before the collect: its footer-read job then runs
-        # while the collect still waits on the batch's first read
-        stored = spark.read.parquet(live_dir)
-        touched = sorted(r[0] for r in merged.select("bucket").distinct().collect())
-        if not touched:
-            return
-        existing = stored.filter(F.col("bucket").isin(touched)).withColumns(
+    # a version with no bucket dir (every key deleted) has no schema to
+    # infer, so it is merged as a new store
+    if live is not None and any(e.startswith("bucket=") for e in os.listdir(live_dir)):
+        stored = spark.read.parquet(live_dir).withColumns(
             {"bucket": F.col("bucket").cast("int"), "_del": F.lit(False),
              "_new": F.lit(0)}
         )
-        merged = existing.unionByName(merged)
+        merged = stored.unionByName(merged)
     version = (live or 0) + 1
     target = os.path.join(versions, str(version))
     w = Window.partitionBy("bucket", *SERVING_KEYS).orderBy(F.desc("_new"))
@@ -265,11 +251,6 @@ def _rewrite_buckets(spark: SparkSession, store_path: str, new: DataFrame) -> No
         .drop("_rn", "_new", "_del"),
         target,
     )
-    for name in stored_buckets:
-        if int(name[len("bucket="):]) not in touched:
-            os.mkdir(os.path.join(target, name))
-            for f in os.listdir(os.path.join(live_dir, name)):
-                os.link(os.path.join(live_dir, name, f), os.path.join(target, name, f))
     link = os.path.join(versions, "link")
     os.symlink(os.path.join(os.path.basename(versions), str(version)), link)
     if not os.path.islink(store) and os.path.isdir(store):
@@ -293,8 +274,7 @@ def serving_apply_changes(
     is a no-op (idempotent, like serving_upsert).
 
     Same keyed merge as serving_upsert: a delete is a keys-only
-    tombstone that beats the stored row and is then dropped, so only
-    the buckets touched by ANY change are scanned and rewritten, and a
+    tombstone that beats the stored row and is then dropped, so a
     bucket whose rows are all deleted is dropped from the store.
     """
     keyed = changes.filter(F.col("change_type").isin("insert", "update", "delete"))

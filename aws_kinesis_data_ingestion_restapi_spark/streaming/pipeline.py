@@ -40,11 +40,10 @@ one size rule (``sinks.write_partitioned``): a batch the plan
 estimates at most AQE's advisory partition size is written by one task
 with no exchange (one Spark job), a bigger one through a REBALANCE
 exchange on its partition columns. The serving upsert is one keyed
-merge behind one hash exchange on the bucket (one file per touched
-bucket); the size rule is not applied there, as one-task coalescing
-of the merge measured slower (BENCH_NOTES.md, "one size rule for table
-writes"). The only data collected to the driver is the touched-bucket
-list (at most ``sinks.SERVING_N_BUCKETS`` ints).
+merge behind one hash exchange on the bucket (one file per bucket);
+the size rule is not applied there, as one-task coalescing of the
+merge measured slower (BENCH_NOTES.md, "one size rule for table
+writes"). No sink collects data to the driver.
 """
 
 from __future__ import annotations

@@ -1,11 +1,10 @@
 """Serving-store writes (K4+E3) and the table and error sinks.
 
 The serving store is a link to its live version dir, which holds one
-``bucket=K/`` dir per hash bucket. A write rewrites ONLY the buckets
-its batch touches; every file of an untouched bucket is carried into
-the next version as a hard link (same bytes, same inode). The crash
-matrix stops a write at each of its filesystem steps and checks that
-a plain read sees the old store or the new one, never a mix.
+``bucket=K/`` dir per hash bucket. A write merges the whole live
+version with its batch into the next version. The crash matrix stops
+a write at each of its filesystem steps and checks that a plain read
+sees the old store or the new one, never a mix.
 """
 
 from __future__ import annotations
@@ -36,49 +35,19 @@ def _rows(spark, keys, status):
     )
 
 
-def _file_hashes(store):
-    out = {}
-    for path in glob.glob(os.path.join(store, "bucket=*", "*.parquet")):
-        with open(path, "rb") as f:
-            out[os.path.relpath(path, store)] = hashlib.md5(f.read()).hexdigest()
-    return out
-
-
-def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
+def test_upsert_of_one_key_into_a_multi_bucket_store(spark, tmp_path):
+    """A single-key upsert updates that row and leaves every other row
+    of every bucket as it was."""
     store = str(tmp_path / "serving")
     keys = [(f"c{i}", f"o{i}") for i in range(200)]
     serving_upsert(spark, _rows(spark, keys, "pending"), store)
+    assert len(glob.glob(os.path.join(store, "bucket=*"))) > 1, (
+        "need multiple buckets for the test to bite"
+    )
 
-    before = _file_hashes(store)
-    inodes = {rel: os.stat(os.path.join(store, rel)).st_ino for rel in before}
-    buckets_present = {p.split(os.sep)[0] for p in before}
-    assert len(buckets_present) > 1, "need multiple buckets for the test to bite"
-
-    # upsert a single key → exactly one touched bucket
     target = keys[7]
     serving_upsert(spark, _rows(spark, [target], "shipped"), store)
-    touched = _rows(spark, [target], "x").select(
-        _bucket_expr().alias("b")
-    ).first()["b"]
 
-    after = _file_hashes(store)
-    for rel, digest in before.items():
-        bucket = int(rel.split(os.sep)[0].split("=")[1])
-        if bucket != touched:
-            assert rel in after, f"untouched file {rel} disappeared"
-            assert after[rel] == digest, f"untouched file {rel} was rewritten"
-            assert os.stat(os.path.join(store, rel)).st_ino == inodes[rel], (
-                f"untouched file {rel} was copied, not linked"
-            )
-    # ...and the touched bucket actually changed
-    changed = {
-        rel for rel in set(before) | set(after)
-        if before.get(rel) != after.get(rel)
-    }
-    assert changed
-    assert {int(r.split(os.sep)[0].split("=")[1]) for r in changed} == {touched}
-
-    # merge semantics: count unchanged, updated row visible, rest intact
     serving = spark.read.parquet(store)
     assert serving.count() == len(keys)
     assert (
@@ -123,10 +92,10 @@ def test_upsert_collapses_batch_internal_duplicates(spark, tmp_path):
     assert sum(v == "pending" for v in got.values()) == len(keys) - 2
 
 
-def test_upsert_into_existing_store_runs_at_most_five_jobs(spark, tmp_path):
-    """The merge is one touched-bucket collect, one schema-inferred
-    scan and one write behind a single shuffle: with AQE each shuffle
-    stage is its own job, so 2 + 1 + 2."""
+def test_upsert_into_existing_store_runs_at_most_three_jobs(spark, tmp_path):
+    """The merge is one schema-inferred scan and one write behind a
+    single shuffle: with AQE each shuffle stage is its own job, so
+    1 + 2."""
     store = str(tmp_path / "serving")
     keys = [(f"c{i}", f"o{i}") for i in range(200)]
     serving_upsert(spark, _rows(spark, keys, "pending"), store)
@@ -139,7 +108,7 @@ def test_upsert_into_existing_store_runs_at_most_five_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 5, sorted(jobs)
+    assert 0 < len(jobs) <= 3, sorted(jobs)
     assert spark.read.parquet(store).filter(F.col("status") == "shipped").count() == 100
 
 
@@ -351,7 +320,7 @@ def test_serving_write_crash_matrix(spark, tmp_path, monkeypatch, writer):
 
     The store spans buckets A, B, C. The upsert updates a key of A and
     adds one in a new bucket E; the change feed also deletes all of C,
-    so C's dir goes away. B is carried over by hard links."""
+    so C's dir goes away. B is rewritten unchanged."""
     from aws_kinesis_data_ingestion_restapi_spark.operators.cdc import snapshot_diff
     from aws_kinesis_data_ingestion_restapi_spark.sinks import serving_apply_changes
 

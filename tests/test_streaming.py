@@ -585,13 +585,13 @@ def test_pipeline_writes_one_file_per_partition_value(spark, stream_dirs):
 
 
 #: Spark jobs of one 30-file micro-batch into an existing serving store:
-#: the five-job serving merge, one write job per table and one for the
-#: errors, plus one when AQE fills the cached batch for the merge's
-#: touched-bucket collect before a table write has filled it (a race:
-#: 10 or 11). A shuffle per table write adds two per table. Above 32
-#: files Spark's listing job in getBatch would add one; no measured
-#: ingest_steady batch held more than 32 (BENCH_NOTES.md).
-MICRO_BATCH_JOB_BUDGET = 11
+#: the three-job serving merge, one write job per table and one for the
+#: errors, so 8; or 9 when AQE fills the cached batch in its own job
+#: before a table write has filled it (a race). A shuffle per table
+#: write adds two per table. Above 32 files Spark's listing job in
+#: getBatch would add one; no measured ingest_steady batch held more
+#: than 32 (BENCH_NOTES.md).
+MICRO_BATCH_JOB_BUDGET = 9
 
 
 def test_micro_batch_job_budget_and_no_checksum_files(spark, stream_dirs):
